@@ -133,13 +133,12 @@ object SqlSurface {
       |> ORDER BY l_returnflag, l_linestatus"""
 
   val queries: Map[String, Q] = Map(
-    // ---- the flagship word count, as a SQL string (lateral explode +
-    // lambda filter + agg + top-N — Catalyst plans the same bounded heap)
+    // ---- the flagship word count, as a SQL string (lateral explode of
+    // the native per-doc term map + agg + top-N — Catalyst plans the same
+    // bounded heap)
     "sql_wordcount_topn" -> sql("""
-      SELECT word, count(*) AS cnt FROM (
-        SELECT explode(filter(split(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z]+'),
-                              w -> length(w) > 0)) AS word
-        FROM documents) t
+      SELECT word, sum(tf) AS cnt
+      FROM documents LATERAL VIEW explode(graft_term_counts(text)) t AS word, tf
       GROUP BY word
       ORDER BY cnt DESC, word ASC
       LIMIT 20"""),

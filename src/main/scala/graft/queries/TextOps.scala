@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   * observable query — scan → tokenize (maximal alpha runs,
   * `/root/reference/slave.cc:77-98`) → count-by-word
   * (`/root/reference/slave.cc:101-152`) → global top-N by count
-  * (`/root/reference/master.cc:585-669`) — as one declarative plan. Catalyst
-  * plans it as scan → Generate(explode) → partial agg → shuffle → final agg
-  * → TakeOrderedAndProject: stage-for-stage the reference pipeline, with the
-  * same bounded-heap top-k algorithm in `TakeOrderedAndProjectExec`.
+  * (`/root/reference/master.cc:585-669`) — as one plan: scan → Generate
+  * (explode of the native `graft_term_counts` per-doc term map: one byte
+  * pass, repeats combined) → partial agg → shuffle → final agg →
+  * TakeOrderedAndProject, with the reference's bounded-heap top-k.
   *
   * The rest are the training-data-pipeline text operators: token counting,
   * quality scoring, a deterministic language-ID heuristic, and document
@@ -215,29 +215,27 @@ object TextOps {
       .select(col("doc_id"), col("nbr"), col("cosine"))
   }
 
+  /** Corpus word counts `(word, cnt bigint)`, unordered: the partial
+    * aggregate sums per-document term frequencies, not single tokens. */
+  private def wordCounts(s: SparkSession, d: String): DataFrame = {
+    graft.functions.GraftFunctions.ensureRegistered(s)
+    Tables.documents(s, d)
+      .select(explode(graft.functions.GraftFunctions.termCounts(col("text"))))
+      .toDF("word", "tf")
+      .groupBy(col("word"))
+      .agg(sum(col("tf")).as("cnt"))
+  }
+
   /** Flagship word-count + top-N as a reusable plan. */
   def wordcountTopN(s: SparkSession, d: String, n: Int): DataFrame =
-    Tables.documents(s, d)
-      .select(explode(split(asciiLower(col("text")), "[^a-z]+")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("word").asc)
-      .limit(n)
+    wordCounts(s, d).orderBy(col("cnt").desc, col("word").asc).limit(n)
 
   val queries: Map[String, Q] = Map(
     // ---- the reference's query: word count + global top-N
     "wordcount_topn" -> ((s, d) => wordcountTopN(s, d, 20)),
 
     // ---- full word count (no limit): complete agg output, totally ordered
-    "wordcount_full" -> ((s, d) => {
-      Tables.documents(s, d)
-        .select(explode(split(asciiLower(col("text")), "[^a-z]+")).as("word"))
-        .filter(length(col("word")) > 0)
-        .groupBy(col("word"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("word"))
-    }),
+    "wordcount_full" -> ((s, d) => wordCounts(s, d).orderBy(col("word"))),
 
     // ---- token counting: whitespace tokens + BPE-ish subword pieces
     // (alpha runs / digit runs / single punctuation, the GPT-2 pre-tokenizer

@@ -1,12 +1,16 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Plan-shape regressions: the properties that matter at 100 TB must stay
   * visible in the optimized plans — predicate pushdown, column pruning,
   * broadcast dimension joins, bounded-heap top-k, and no cartesian
   * products anywhere except the deliberate broadcast query-set cross. */
-class PlanAuditSpec extends SparkSpec {
+class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val d = "/root/testdata/sf0.001"
 
@@ -34,6 +38,25 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan("wordcount_topn").contains("TakeOrderedAndProject"))
     // per-group top-k: rank filter pushed into a group-limit operator
     assert(plan("q17_window_topk_per_group").contains("WindowGroupLimit"))
+  }
+
+  test("flagship word count tokenizes with the native kernel and " +
+    "combines map-side below its one exchange (DataFrame and SQL)") {
+    for (name <- Seq("wordcount_topn", "sql_wordcount_topn")) {
+      val df = SparkEntry.queries(name)(spark, d)
+      df.collect()
+      val exec = df.queryExecution.executedPlan
+      val p = exec.treeString
+      assert(p.contains("graft_term_counts"), s"$name: native tokenizer missing")
+      assert(p.contains("TakeOrderedAndProject"), s"$name: no bounded heap")
+      assert(!p.contains("split("), s"$name: regex split back in the plan")
+      val exchanges = collect(exec) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, s"$name: ${exchanges.size} exchanges")
+      val partial = exchanges.head.collect { case a: HashAggregateExec
+        if a.aggregateExpressions.nonEmpty &&
+          a.aggregateExpressions.forall(_.mode == Partial) => a }
+      assert(partial.nonEmpty, s"$name: no partial aggregate below the exchange")
+    }
   }
 
   test("similarity rank windows push the rank filter into a bounded " +
