@@ -2,11 +2,13 @@ package graft.functions
 
 import java.security.MessageDigest
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native text-hashing kernels for the dedup/fingerprint family.
@@ -22,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * no shuffle/explode for per-document values).
   *
   * Shared tokenizer contract (same as `TextOps.tokens`, the reference's
-  * observable tokenization, `/root/reference/slave.cc:77-98`): a token is
+  * observable tokenization, `slave.cc:77-98`): a token is
   * a maximal run of [a-z] after ASCII lowercasing (A–Z → a–z); any other
   * byte delimits, including every byte ≥ 0x80 — so multi-byte UTF-8
   * sequences delimit and the kernels match
@@ -32,6 +34,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * its 'İ' → "i̇" expansion maps a non-ASCII char INTO [a-z]. All md5
   * primitives match the cross-engine recipe used everywhere else:
   * `int(hex(md5(x))[i, n])` is the same value in Spark, DuckDB, and here.
+  *
+  * Byte-buffer contract: `tokenize` reads the input string in place
+  * (never copies or writes it) and writes the lowercased tokens into a
+  * fresh per-call byte buffer, joined by exactly one space. A k-gram of
+  * consecutive tokens — a term (k = 1), a bigram (2), a shingle (3) — is
+  * therefore one contiguous slice of that buffer, equal byte for byte to
+  * the space-joined gram the oracles spell: kernels hash, count and
+  * compare slices, and build no per-token String. The string keys they
+  * return are `UTF8String` views over the buffer; a buffer belongs to one
+  * call and is never reused or written after the call returns, so a
+  * returned value stays valid however many calls follow.
   */
 object TextHashKernels {
 
@@ -48,59 +61,195 @@ object TextHashKernels {
     v >>> 4
   }
 
-  /** Maximal [a-z] runs after ASCII lowercasing (see object doc). */
-  private def tokenize(b: Array[Byte]): java.util.ArrayList[String] = {
-    val out = new java.util.ArrayList[String]
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    while (i < b.length) {
-      var c = b(i) & 0xff
-      if (c >= 'A' && c <= 'Z') c += 32
-      if (c >= 'a' && c <= 'z') sb.append(c.toChar)
-      else if (sb.length > 0) { out.add(sb.toString); sb.setLength(0) }
-      i += 1
+  /** md5 of `b[from, from + len)`. */
+  private def md5Of(b: Array[Byte], from: Int, len: Int): Array[Byte] = {
+    val digest = md5.get()
+    digest.reset()
+    digest.update(b, from, len)
+    digest.digest()
+  }
+
+  private val SimhashSalt = "99|".getBytes("US-ASCII")
+
+  /** md5("99|" + token): the per-token SimHash bit source. */
+  private def simhashDigest(b: Array[Byte], from: Int, len: Int)
+      : Array[Byte] = {
+    val digest = md5.get()
+    digest.reset()
+    digest.update(SimhashSalt)
+    digest.update(b, from, len)
+    digest.digest()
+  }
+
+  /** One document's tokens (see the object doc): token i starts at
+    * `starts(i)` and ends one byte (the joining space) before
+    * `starts(i + 1)`; `starts(n)` continues that pattern past the last
+    * token, so the k-gram at i is the slice `buf[starts(i), starts(i + k)
+    * - 1)`. `hashes(i)` is token i's polynomial hash (31·h + byte). */
+  private final class Tokens(val buf: Array[Byte], starts: Array[Int],
+                             val hashes: Array[Int], val n: Int) {
+    def from(i: Int): Int = starts(i)
+    def len(i: Int, k: Int): Int = starts(i + k) - 1 - starts(i)
+  }
+
+  /** The one tokenizer: maximal [a-z] runs after ASCII lowercasing (see
+    * object doc), in one pass over the string's bytes in place. The buffer
+    * cannot overflow — every separating space stands for at least one
+    * delimiter byte of the input — and n tokens need at least 2n - 1
+    * input bytes, so `starts` holds n + 1 entries. */
+  private def tokenize(s: UTF8String): Tokens = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val nb = s.numBytes
+    val buf = new Array[Byte](nb)
+    val starts = new Array[Int](nb / 2 + 2)
+    val hashes = new Array[Int](nb / 2 + 1)
+    @inline def lowered(i: Int): Byte = {
+      val c = Platform.getByte(base, off + i)
+      if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
     }
-    if (sb.length > 0) out.add(sb.toString)
-    out
+    var n = 0
+    var w = 0
+    var i = 0
+    while (i < nb) {
+      var c = lowered(i)
+      i += 1
+      if (c >= 'a' && c <= 'z') {
+        if (n > 0) { buf(w) = ' '; w += 1 }
+        starts(n) = w
+        var h = 0
+        while (c >= 'a' && c <= 'z') {
+          buf(w) = c
+          w += 1
+          h = 31 * h + c
+          c = if (i < nb) lowered(i) else 0
+          i += 1
+        }
+        hashes(n) = h
+        n += 1
+      }
+    }
+    starts(n) = w + 1
+    new Tokens(buf, starts, hashes, n)
+  }
+
+  /** The distinct k-grams of `t` with their counts, in first-occurrence
+    * order: an open-addressing table (linear probing, load ≤ 1/2, doubled
+    * as it fills) over entries keyed by (hash, offset, length) into the
+    * token buffer — no String, no boxing. A gram's hash folds its tokens'
+    * hashes, so no byte is hashed twice. */
+  private final class GramCounts(t: Tokens, k: Int) {
+    val buf: Array[Byte] = t.buf
+    private val grams = math.max(t.n - k + 1, 0)
+    // entry index + 1, 0 = free; more than 2 slots per gram up to 4096
+    // grams, so a document of that size never grows the table
+    private var slots =
+      new Array[Int](Integer.highestOneBit(math.min(grams, 4096) * 4 | 8))
+    private var hashes = new Array[Int](slots.length / 2)
+    var from = new Array[Int](slots.length / 2)
+    var len = new Array[Int](slots.length / 2)
+    var count = new Array[Long](slots.length / 2)
+    var size = 0
+
+    locally {
+      var i = 0
+      while (i < grams) {
+        var h = t.hashes(i)
+        var j = 1
+        while (j < k) { h = 31 * h + t.hashes(i + j); j += 1 }
+        h *= 0x9e3779b1
+        add(h ^ (h >>> 16), t.from(i), t.len(i, k))
+        i += 1
+      }
+    }
+
+    private def add(h: Int, f: Int, l: Int): Unit = {
+      val mask = slots.length - 1
+      var p = h & mask
+      var e = slots(p) - 1
+      while (e >= 0) {
+        if (hashes(e) == h && len(e) == l && sameBytes(from(e), f, l)) {
+          count(e) += 1
+          return
+        }
+        p = (p + 1) & mask
+        e = slots(p) - 1
+      }
+      hashes(size) = h
+      from(size) = f
+      len(size) = l
+      count(size) = 1
+      size += 1
+      slots(p) = size
+      if (2 * size == slots.length) grow()
+    }
+
+    /** A plain loop: on grams of a few bytes it measured faster than
+      * `Arrays.equals`' vectorized compare. */
+    private def sameBytes(a: Int, b: Int, l: Int): Boolean = {
+      var i = 0
+      while (i < l) { if (buf(a + i) != buf(b + i)) return false; i += 1 }
+      true
+    }
+
+    private def grow(): Unit = {
+      val cap = slots.length
+      slots = new Array[Int](2 * cap)
+      hashes = java.util.Arrays.copyOf(hashes, cap)
+      from = java.util.Arrays.copyOf(from, cap)
+      len = java.util.Arrays.copyOf(len, cap)
+      count = java.util.Arrays.copyOf(count, cap)
+      val mask = 2 * cap - 1
+      var e = 0
+      while (e < size) {
+        var p = hashes(e) & mask
+        while (slots(p) != 0) p = (p + 1) & mask
+        slots(p) = e + 1
+        e += 1
+      }
+    }
+
+    def key(e: Int): UTF8String =
+      UTF8String.fromAddress(buf, Platform.BYTE_ARRAY_OFFSET + from(e), len(e))
+
+    def keys: ArrayData = {
+      val out = new Array[AnyRef](size)
+      var e = 0
+      while (e < size) { out(e) = key(e); e += 1 }
+      new GenericArrayData(out)
+    }
+
+    def toMap: MapData = new ArrayBasedMapData(keys,
+      UnsafeArrayData.fromPrimitiveArray(count, Platform.LONG_ARRAY_OFFSET,
+        size, 8))
+
+    /** Unsigned byte order of two entries' grams — lexicographic order on
+      * the [a-z ] gram alphabet. */
+    def compare(a: Int, b: Int): Int = java.util.Arrays.compareUnsigned(
+      buf, from(a), from(a) + len(a), buf, from(b), from(b) + len(b))
   }
 
   /** Distinct space-joined 3-word shingles, first-occurrence order —
     * `array_distinct(zip_with(zip_with(slice...)))` over the shared
     * tokenizer, in one compiled pass. */
-  def shingles(s: UTF8String): ArrayData = {
-    val toks = tokenize(s.getBytes)
-    val n = toks.size
-    val seen = new java.util.LinkedHashSet[String]
-    var i = 0
-    while (i + 2 < n) {
-      seen.add(toks.get(i) + " " + toks.get(i + 1) + " " + toks.get(i + 2))
-      i += 1
-    }
-    val out = new Array[AnyRef](seen.size)
-    val it = seen.iterator()
-    var j = 0
-    while (it.hasNext) { out(j) = UTF8String.fromString(it.next()); j += 1 }
-    new GenericArrayData(out)
-  }
+  def shingles(s: UTF8String): ArrayData =
+    new GramCounts(tokenize(s), 3).keys
 
   /** Distinct 60-bit shingle hashes (first 15 hex chars of md5(shingle)),
     * first-occurrence order — the posting keys for the inverted-index
     * near-dup join: an 8-byte join/shuffle key instead of a ~20-byte
     * shingle string. Deduped AFTER hashing, so a (astronomically rare)
     * in-document hash collision shrinks the set exactly as the oracle's
-    * count-distinct-over-hashes does. */
+    * count-distinct-over-hashes does. Hashing the distinct shingles in
+    * first-occurrence order gives each hash's first occurrence at the
+    * same place as hashing every position would. */
   def shingleHashes(s: UTF8String): ArrayData = {
-    val toks = tokenize(s.getBytes)
-    val n = toks.size
+    val sh = new GramCounts(tokenize(s), 3)
     val seen = new java.util.LinkedHashSet[java.lang.Long]
-    val digest = md5.get()
-    var i = 0
-    while (i + 2 < n) {
-      val sh = toks.get(i) + " " + toks.get(i + 1) + " " + toks.get(i + 2)
-      digest.reset()
-      seen.add(top60(digest.digest(
-        sh.getBytes(java.nio.charset.StandardCharsets.UTF_8))))
-      i += 1
+    var e = 0
+    while (e < sh.size) {
+      seen.add(top60(md5Of(sh.buf, sh.from(e), sh.len(e))))
+      e += 1
     }
     val out = new Array[Long](seen.size)
     val it = seen.iterator()
@@ -115,24 +264,12 @@ object TextHashKernels {
     * md5(space-joined gram) — the shared cross-engine convention. Empty
     * array when the document has fewer than k tokens. */
   def gramHashes(s: UTF8String, k: Int): ArrayData = {
-    val toks = tokenize(s.getBytes)
-    val n = toks.size
-    if (n < k) return new GenericArrayData(Array.emptyLongArray)
-    val out = new Array[Long](n - k + 1)
-    val digest = md5.get()
-    val sb = new java.lang.StringBuilder
+    val t = tokenize(s)
+    if (t.n < k) return new GenericArrayData(Array.emptyLongArray)
+    val out = new Array[Long](t.n - k + 1)
     var i = 0
-    while (i + k <= n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < k) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks.get(i + j))
-        j += 1
-      }
-      digest.reset()
-      out(i) = top60(digest.digest(
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    while (i < out.length) {
+      out(i) = top60(md5Of(t.buf, t.from(i), t.len(i, k)))
       i += 1
     }
     new GenericArrayData(out)
@@ -140,28 +277,27 @@ object TextHashKernels {
 
   /** 60-bit SimHash: per token h = first 60 bits of md5("99|" + token),
     * output bit j set iff strictly more tokens have bit j set than clear
-    * (multiplicity counts). NULL when the document has no tokens — the
-    * aggregation form simply had no row for such documents. */
+    * (multiplicity counts: each distinct token votes with its count).
+    * NULL when the document has no tokens — the aggregation form simply
+    * had no row for such documents. */
   def simhash(s: UTF8String): java.lang.Long = {
-    val toks = tokenize(s.getBytes)
-    if (toks.isEmpty) return null
-    val counts = new Array[Int](60)
-    val digest = md5.get()
-    var i = 0
-    while (i < toks.size) {
-      digest.reset()
-      val h = top60(digest.digest(
-        ("99|" + toks.get(i)).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    val terms = new GramCounts(tokenize(s), 1)
+    if (terms.size == 0) return null
+    val votes = new Array[Int](60)
+    var e = 0
+    while (e < terms.size) {
+      val h = top60(simhashDigest(terms.buf, terms.from(e), terms.len(e)))
+      val c = terms.count(e).toInt
       var j = 0
       while (j < 60) {
-        if (((h >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1
+        if (((h >>> j) & 1L) == 1L) votes(j) += c else votes(j) -= c
         j += 1
       }
-      i += 1
+      e += 1
     }
     var r = 0L
     var j = 0
-    while (j < 60) { if (counts(j) > 0) r |= 1L << j; j += 1 }
+    while (j < 60) { if (votes(j) > 0) r |= 1L << j; j += 1 }
     java.lang.Long.valueOf(r)
   }
 
@@ -176,15 +312,13 @@ object TextHashKernels {
     * as [[simhash]] per bit. Returns `words` longs (1 or 2; md5 has only
     * 128 bits); NULL when the document has no tokens. */
   def simhashWide(s: UTF8String, words: Int): ArrayData = {
-    val toks = tokenize(s.getBytes)
-    if (toks.isEmpty) return null
-    val counts = new Array[Int](words * 64)
-    val digest = md5.get()
-    var i = 0
-    while (i < toks.size) {
-      digest.reset()
-      val d = digest.digest(
-        ("99|" + toks.get(i)).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val terms = new GramCounts(tokenize(s), 1)
+    if (terms.size == 0) return null
+    val votes = new Array[Int](words * 64)
+    var e = 0
+    while (e < terms.size) {
+      val d = simhashDigest(terms.buf, terms.from(e), terms.len(e))
+      val c = terms.count(e).toInt
       var w = 0
       while (w < words) {
         var v = 0L
@@ -192,20 +326,20 @@ object TextHashKernels {
         while (b < 8) { v = (v << 8) | (d(8 * w + b) & 0xffL); b += 1 }
         var j = 0
         while (j < 64) {
-          if (((v >>> j) & 1L) == 1L) counts(64 * w + j) += 1
-          else counts(64 * w + j) -= 1
+          if (((v >>> j) & 1L) == 1L) votes(64 * w + j) += c
+          else votes(64 * w + j) -= c
           j += 1
         }
         w += 1
       }
-      i += 1
+      e += 1
     }
     val out = new Array[Long](words)
     var w = 0
     while (w < words) {
       var r = 0L
       var j = 0
-      while (j < 64) { if (counts(64 * w + j) > 0) r |= 1L << j; j += 1 }
+      while (j < 64) { if (votes(64 * w + j) > 0) r |= 1L << j; j += 1 }
       out(w) = r
       w += 1
     }
@@ -247,32 +381,16 @@ object TextHashKernels {
     * locally per row, removing that aggregation's shuffle entirely (term
     * counting is per-document; only corpus-level statistics need the
     * exchange). */
-  def termCounts(s: UTF8String): org.apache.spark.sql.catalyst.util.MapData = {
-    val toks = tokenize(s.getBytes)
-    val counts = new java.util.LinkedHashMap[String, Long]
-    var i = 0
-    while (i < toks.size) {
-      counts.merge(toks.get(i), 1L, (a, b) => a + b)
-      i += 1
-    }
-    packMap(counts)
-  }
+  def termCounts(s: UTF8String): MapData =
+    new GramCounts(tokenize(s), 1).toMap
 
   /** Per-document bigram frequencies ("w1 w2" → count) over the shared
     * tokenizer, first-occurrence order — the bigram-instance `explode` +
     * `groupBy(doc, w1, w2)` computed locally per row, removing that
     * aggregation's shuffle (bigram counting is per-document; only
     * corpus-level LM statistics need the exchange). */
-  def bigramCounts(s: UTF8String): org.apache.spark.sql.catalyst.util.MapData = {
-    val toks = tokenize(s.getBytes)
-    val counts = new java.util.LinkedHashMap[String, Long]
-    var i = 0
-    while (i + 1 < toks.size) {
-      counts.merge(toks.get(i) + " " + toks.get(i + 1), 1L, (a, b) => a + b)
-      i += 1
-    }
-    packMap(counts)
-  }
+  def bigramCounts(s: UTF8String): MapData =
+    new GramCounts(tokenize(s), 2).toMap
 
   /** Per-document top bigram — the (bigram, cnt) pair with the largest
     * count, ties to the byte-wise LARGEST bigram (the repetition scorer's
@@ -282,45 +400,18 @@ object TextHashKernels {
     * query needs no explode, no aggregation, and no second kernel
     * evaluation. NULL when the document has fewer than two tokens (such
     * documents had no exploded rows in the aggregation form). */
-  def topBigram(s: UTF8String)
-      : org.apache.spark.sql.catalyst.InternalRow = {
-    val toks = tokenize(s.getBytes)
-    if (toks.size < 2) return null
-    val counts = new java.util.HashMap[String, Long]
-    var i = 0
-    while (i + 1 < toks.size) {
-      counts.merge(toks.get(i) + " " + toks.get(i + 1), 1L, (a, b) => a + b)
-      i += 1
+  def topBigram(s: UTF8String): InternalRow = {
+    val bigrams = new GramCounts(tokenize(s), 2)
+    if (bigrams.size == 0) return null
+    var best = 0
+    var e = 1
+    while (e < bigrams.size) {
+      val c = bigrams.count(e)
+      val bestC = bigrams.count(best)
+      if (c > bestC || (c == bestC && bigrams.compare(e, best) > 0)) best = e
+      e += 1
     }
-    var bestK: String = null
-    var bestC = 0L
-    val it = counts.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val c = e.getValue
-      if (c > bestC || (c == bestC && e.getKey.compareTo(bestK) > 0)) {
-        bestC = c
-        bestK = e.getKey
-      }
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](UTF8String.fromString(bestK), bestC))
-  }
-
-  private def packMap(counts: java.util.LinkedHashMap[String, Long])
-      : org.apache.spark.sql.catalyst.util.MapData = {
-    val keys = new Array[AnyRef](counts.size)
-    val vals = new Array[Long](counts.size)
-    val it = counts.entrySet().iterator()
-    var j = 0
-    while (it.hasNext) {
-      val e = it.next()
-      keys(j) = UTF8String.fromString(e.getKey)
-      vals(j) = e.getValue
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-      new GenericArrayData(keys), new GenericArrayData(vals))
+    new GenericInternalRow(Array[Any](bigrams.key(best), bigrams.count(best)))
   }
 
   /** Winnowing fingerprints (Schleimer et al., SIGMOD 2003): ASCII-lower

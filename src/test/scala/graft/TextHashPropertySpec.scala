@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.TextHashKernels
 import java.security.MessageDigest
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Properties}
 
@@ -14,7 +14,10 @@ import org.scalacheck.{Gen, Prop, Properties}
   * parse the hex digest text, the same recipe the DuckDB oracles
   * execute; the references also case-fold and slice at the UTF-16 level
   * where the kernels walk UTF-8 bytes), so a shared bug in the fast path
-  * cannot self-confirm. No SparkSession needed. */
+  * cannot self-confirm. Every kernel reads its text as a slice of a
+  * larger, letter-padded buffer ([[inPlace]]) — the row-backed form Spark
+  * hands it — so a read outside the slice shows up as extra tokens. No
+  * SparkSession needed. */
 object TextHashPropertySpec extends Properties("TextHashKernels") {
 
   // unicode salt: multi-byte delimiters of every UTF-8 width (2–4 bytes,
@@ -54,19 +57,38 @@ object TextHashPropertySpec extends Properties("TextHashKernels") {
       .map((a, b, c) => s"$a $b $c").toList.distinct
   }
 
+  /** `s` as bytes [2, 2 + len) of a buffer padded with letters on both
+    * sides. */
+  private def inPlace(s: String): UTF8String = {
+    val b = s.getBytes("UTF-8")
+    val padded = "xq".getBytes("UTF-8") ++ b ++ "qx".getBytes("UTF-8")
+    UTF8String.fromBytes(padded, 2, b.length)
+  }
+
   private def longs(a: ArrayData): List[Long] = a.toLongArray().toList
   private def strings(a: ArrayData): List[String] =
     (0 until a.numElements()).map(a.getUTF8String(_).toString).toList
+  private def entries(m: MapData): List[(String, Long)] =
+    strings(m.keyArray()).zip(m.valueArray().toLongArray())
+
+  /** Distinct values with their counts, in first-occurrence order. */
+  private def firstOccurrenceCounts(xs: List[String]): List[(String, Long)] =
+    xs.distinct.map(x => x -> xs.count(_ == x).toLong)
+
+  private def refBigrams(s: String): List[String] = {
+    val toks = refTokens(s)
+    toks.zip(toks.drop(1)).map { case (a, b) => a + " " + b }
+  }
 
   property("shingles == regex-tokenized distinct triples") =
     Prop.forAll(genText) { s =>
-      strings(TextHashKernels.shingles(UTF8String.fromString(s))) ==
+      strings(TextHashKernels.shingles(inPlace(s))) ==
         refShingles(s)
     }
 
   property("shingleHashes == hex-parsed md5 prefixes of shingles") =
     Prop.forAll(genText) { s =>
-      longs(TextHashKernels.shingleHashes(UTF8String.fromString(s))) ==
+      longs(TextHashKernels.shingleHashes(inPlace(s))) ==
         refShingles(s)
           .map(sh => java.lang.Long.parseLong(md5hex(sh).take(15), 16))
           .distinct
@@ -82,7 +104,7 @@ object TextHashPropertySpec extends Properties("TextHashKernels") {
           .toList
       }
       List(1, 3, 8).forall { k =>
-        longs(TextHashKernels.gramHashes(UTF8String.fromString(s), k)) ==
+        longs(TextHashKernels.gramHashes(inPlace(s), k)) ==
           refGrams(k)
       }
     }
@@ -100,7 +122,7 @@ object TextHashPropertySpec extends Properties("TextHashKernels") {
             if (votes > 0) 1L << j else 0L
           }.sum)
         }
-      Option(TextHashKernels.simhash(UTF8String.fromString(s)))
+      Option(TextHashKernels.simhash(inPlace(s)))
         .map(_.longValue()) == expected
     }
 
@@ -118,7 +140,7 @@ object TextHashPropertySpec extends Properties("TextHashKernels") {
           }.min
         }.toList)
       val arr = TextHashKernels.minhashSig(
-        TextHashKernels.shingles(UTF8String.fromString(s))
+        TextHashKernels.shingles(inPlace(s))
           .asInstanceOf[ArrayData], 16)
       Option(arr).map(longs) == expected
     }
@@ -133,43 +155,62 @@ object TextHashPropertySpec extends Properties("TextHashKernels") {
           md5hex(new String(cps, i, 8)).take(8), 16))
       val expected = (0 to hs.length - 4)
         .map(i => hs.slice(i, i + 4).min).distinct.toList
-      longs(TextHashKernels.winnow(UTF8String.fromString(s))) == expected
+      longs(TextHashKernels.winnow(inPlace(s))) == expected
     }
 
   property("termCounts == regex-tokenized frequency map") =
     Prop.forAll(genText) { s =>
-      val m = TextHashKernels.termCounts(UTF8String.fromString(s))
-      val got = (0 until m.numElements()).map(i =>
-        m.keyArray().getUTF8String(i).toString ->
-          m.valueArray().getLong(i)).toMap
-      got == refTokens(s).groupBy(identity).view.mapValues(_.size.toLong)
-        .toMap
+      entries(TextHashKernels.termCounts(inPlace(s))) ==
+        firstOccurrenceCounts(refTokens(s))
     }
 
   property("bigramCounts == regex-tokenized bigram frequency map") =
     Prop.forAll(genText) { s =>
-      val m = TextHashKernels.bigramCounts(UTF8String.fromString(s))
-      val got = (0 until m.numElements()).map(i =>
-        m.keyArray().getUTF8String(i).toString ->
-          m.valueArray().getLong(i)).toMap
-      val toks = refTokens(s)
-      val expected = toks.zip(toks.drop(1))
-        .map { case (a, b) => a + " " + b }
-        .groupBy(identity).view.mapValues(_.size.toLong).toMap
-      got == expected
+      entries(TextHashKernels.bigramCounts(inPlace(s))) ==
+        firstOccurrenceCounts(refBigrams(s))
     }
 
   property("topBigram == (max cnt, then max bigram) over the frequency map") =
     Prop.forAll(genText) { s =>
-      val r = TextHashKernels.topBigram(UTF8String.fromString(s))
-      val toks = refTokens(s)
-      val freq = toks.zip(toks.drop(1))
-        .map { case (a, b) => a + " " + b }
-        .groupBy(identity).view.mapValues(_.size.toLong).toMap
+      val r = TextHashKernels.topBigram(inPlace(s))
+      val freq = firstOccurrenceCounts(refBigrams(s))
       if (freq.isEmpty) r == null
       else {
         val (bg, c) = freq.maxBy { case (k, v) => (v, k) }
         r != null && r.getUTF8String(0).toString == bg && r.getLong(1) == c
       }
+    }
+
+  /** Every kernel's result on `u`, each read back on demand. */
+  private def results(u: UTF8String): List[() => Any] = {
+    val sh = TextHashKernels.shingles(u)
+    val shh = TextHashKernels.shingleHashes(u)
+    val gh = TextHashKernels.gramHashes(u, 2)
+    val sim = TextHashKernels.simhash(u)
+    val simw = TextHashKernels.simhashWide(u, 2)
+    val tc = TextHashKernels.termCounts(u)
+    val bc = TextHashKernels.bigramCounts(u)
+    val tb = TextHashKernels.topBigram(u)
+    val w = TextHashKernels.winnow(u)
+    List(() => strings(sh), () => longs(shh), () => longs(gh), () => sim,
+      () => Option(simw).map(longs), () => entries(tc), () => entries(bc),
+      () => Option(tb).map(r => r.getUTF8String(0).toString -> r.getLong(1)),
+      () => longs(w))
+  }
+
+  property("results outlive later calls; inputs are never written") =
+    Prop.forAll(genText, genText) { (a, b) =>
+      val ua = inPlace(a)
+      val ub = inPlace(b)
+      val bytesA = ua.getBaseObject.asInstanceOf[Array[Byte]].clone()
+      val bytesB = ub.getBaseObject.asInstanceOf[Array[Byte]].clone()
+      val ra = results(ua)
+      val before = ra.map(_())
+      results(ub).foreach(_())
+      ra.map(_()) == before &&
+        java.util.Arrays.equals(bytesA,
+          ua.getBaseObject.asInstanceOf[Array[Byte]]) &&
+        java.util.Arrays.equals(bytesB,
+          ub.getBaseObject.asInstanceOf[Array[Byte]])
     }
 }
