@@ -475,17 +475,12 @@ object Dedup {
     * no stage funnels the frontier through one task — and every join is
     * un-hinted, so AQE broadcasts the frontier while it is small and falls
     * back to a shuffle join when it is not (nothing is forced through the
-    * driver). Each round references `labels` twice (union + self-join), so
-    * an eager checkpoint truncates the lineage — the plan stays one
-    * round deep instead of re-executing 2^k subtrees. Pass `checkpointDir`
-    * to snapshot each round to reliable storage (`df.checkpoint`) so a lost
-    * executor replays from the last round, not from the raw edges — the
-    * cluster-scale setting; the default `localCheckpoint` keeps round
-    * state in executor block storage (fine single-node / test-scale).
-    * Convergence detection is folded into the round's aggregation
-    * ([[componentsStep]] carries the previous label through the min-agg),
-    * so checking it scans the already-materialized checkpoint instead of
-    * running a second job over the round's plan. */
+    * driver). The rounds run through [[graft.Fixpoint]], which snapshots
+    * each one; pass `checkpointDir` for reliable snapshots (the
+    * cluster-scale setting). [[componentsStep]] carries each node's
+    * previous label through the min-agg, so the count of changed labels
+    * is observed on the round's own snapshot job and the loop stops when
+    * it reads 0 — no second job per round. */
   def components(ids: DataFrame, pairs: DataFrame,
                  checkpointDir: Option[String] = None): DataFrame =
     componentsWithRounds(ids, pairs, checkpointDir)._1
@@ -509,32 +504,22 @@ object Dedup {
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("src")))
-    val snap: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        pairs.sparkSession.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(eager = true)
-    }
     // seed = min(self, neighbors): the same aggregation that extracts the
     // node set performs the first propagation round for free (identical
     // fixpoint — min-label propagation is monotone from any state between
-    // identity and the fixpoint)
-    var labels = snap(edges.groupBy(col("src"))
+    // identity and the fixpoint); its `prev` is the identity label
+    val seed = edges.groupBy(col("src"))
       .agg(min(col("dst")).as("mindst"))
       .select(col("src").as("doc_id"),
-        least(col("src"), col("mindst")).as("component")))
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < 32) {
-      val next = snap(componentsStep(edges, labels))
-      converged = next.filter(col("component") =!= col("prev")).isEmpty
-      labels = next.select(col("doc_id"), col("component"))
-      rounds += 1
-    }
+        least(col("src"), col("mindst")).as("component"),
+        col("src").as("prev"))
     // an unconverged exit would silently split clusters (and diverge from
-    // the fixpoint the oracle computes) — fail loudly instead
-    require(converged,
-      s"components() did not converge within $rounds rounds")
+    // the fixpoint the oracle computes) — fail loudly at the cap instead
+    val (labels, rounds) = graft.Fixpoint.iterate("components", seed,
+      maxRounds = 32, failAtCap = true, checkpointDir)(
+      componentsStep(edges, _))(
+      count(when(col("component") =!= col("prev"), 1)),
+      (_, changed) => changed == 0)
     val out = ids.toDF("doc_id")
       .join(labels, Seq("doc_id"), "left_outer")
       .select(col("doc_id"),

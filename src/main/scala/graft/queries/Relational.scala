@@ -838,12 +838,10 @@ object Relational {
     // peel is idempotent at the fixpoint, so an early-converged engine
     // result equals the oracle's fixed 20-round replay; the sf0.01 graph
     // cascades 11 rounds, so the cap carries real headroom; a corpus
-    // still shrinking at round 20 diverges loudly via the count check in
-    // [[kcore]], never silently). Each round is one map-side-combinable
-    // degree count + two semi-joins, localCheckpoint-snapped so the plan
-    // never accretes lineage — O(m) per round, O(m^1.5) total worst
-    // case, the distributed-peel shape of Montresor et al. (arXiv
-    // 1103.5320). Output: surviving nodes with their within-core degree.
+    // still shrinking at round 20 fails loudly at the cap in [[kcore]],
+    // never silently). Each round is one map-side-combinable degree
+    // count + two semi-joins — O(m) per round, O(m^1.5) total worst case,
+    // the distributed-peel shape of Montresor et al. (arXiv 1103.5320). Output: surviving nodes with their within-core degree.
     "q36_kcore" -> ((s, d) => kcore(copurchaseEdges(s, d), k = 3,
       maxRounds = 20)),
 
@@ -1002,13 +1000,12 @@ object Relational {
     // corpus); layers capped at 6 (the oracle's replay depth — a loud,
     // documented cap like kcore's). Per round: frontier ⋈ edges (the
     // frontier side shrinks or stays bounded by |V|), one distinct, one
-    // anti-join against visited, `localCheckpoint` so lineage stays one
-    // round deep; cost per round is O(edges incident to frontier) and
-    // the total is O(m) per layer — the Pregel BFS shape. Output is the
-    // per-layer census (count, min/max vertex), which pins every layer's
-    // SET without emitting |V| rows. Oracle: recursive CTE producing
-    // (v, d) pairs with min-d per vertex — UNION-dedup bounds the
-    // recursion at |V|·7 rows.
+    // anti-join against visited; cost per round is O(edges incident to
+    // frontier) and the total is O(m) per layer — the Pregel BFS shape.
+    // Output is the per-layer census (count, min/max vertex), which pins
+    // every layer's SET without emitting |V| rows. Oracle: recursive CTE
+    // producing (v, d) pairs with min-d per vertex — UNION-dedup bounds
+    // the recursion at |V|·7 rows.
     "q40_bfs_layers" -> ((s, d) => bfsLayers(copurchaseEdges(s, d),
       maxDepth = 6)),
 
@@ -1091,11 +1088,10 @@ object Relational {
     // the |V|-row label table, one (node, label) count that
     // hash-aggregates map-side, and a max(struct(count, −label)) argmax
     // — map-side combinable, so no per-node sort window exists
-    // anywhere; `localCheckpoint` snaps each round's lineage. The
-    // struct form (not the 2²⁰ packed decimal) is deliberate: labels
-    // are vertex ids, and the scale-curve corpus's 10⁹-offset ids sit
-    // far outside any pack domain. Output: every vertex with its
-    // round-4 community.
+    // anywhere. The struct form (not the 2²⁰ packed decimal) is
+    // deliberate: labels are vertex ids, and the scale-curve corpus's
+    // 10⁹-offset ids sit far outside any pack domain. Output: every
+    // vertex with its round-4 community.
     "q42_label_communities" -> ((s, d) =>
       labelCommunities(copurchaseEdges(s, d), rounds = 4))
   )
@@ -1424,25 +1420,23 @@ object Relational {
     * graph's smallest vertex over an undirected `(a, b)` edge list,
     * layers 0..maxDepth, one row per layer. */
   private[graft] def bfsLayers(edges0: DataFrame, maxDepth: Int): DataFrame = {
-    val snap: DataFrame => DataFrame = df => df.localCheckpoint(eager = true)
     val edges = graft.Caching.persistTracked(edges0)
     val und = edges.unionAll(
       edges.select(col("b").as("a"), col("a").as("b")))
     val seed = edges.agg(min(least(col("a"), col("b"))).as("v"))
       .filter(col("v").isNotNull)
       .select(col("v"), lit(0L).as("dist"))
-    var visited = snap(seed)
-    var frontier = visited
-    var depth = 0
-    while (depth < maxDepth && !frontier.isEmpty) {
-      depth += 1
-      val next = frontier.join(und, frontier("v") === und("a"))
+    // the snapshotted layers so far; their union is the visited set
+    val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val (last, _) = graft.Fixpoint.iterate("bfs", seed, maxDepth,
+        failAtCap = false) { frontier =>
+      layers += frontier
+      frontier.join(und, frontier("v") === und("a"))
         .select(und("b").as("v")).distinct()
-        .join(visited, Seq("v"), "left_anti")
-        .select(col("v"), lit(depth.toLong).as("dist"))
-      frontier = snap(next)
-      visited = snap(visited.unionAll(frontier))
-    }
+        .join(layers.reduce(_ unionAll _), Seq("v"), "left_anti")
+        .select(col("v"), lit(layers.size.toLong).as("dist"))
+    }(count(lit(1)), (_, frontier) => frontier == 0L)
+    val visited = (layers :+ last).reduce(_ unionAll _)
     visited.groupBy(col("dist"))
       .agg(count(lit(1)).as("n_vertices"),
         min(col("v")).as("min_v"), max(col("v")).as("max_v"))
@@ -1495,18 +1489,6 @@ object Relational {
           .as("transitivity_grid"))
   }
 
-  /** k-core by iterative peeling over an undirected edge list (`a < b`
-    * per row, no duplicates) — the engine behind `q36_kcore`, factored so
-    * specs can drive hand-built graphs. Each round drops every edge with
-    * an endpoint of degree < k; the loop exits early at the fixpoint
-    * (edge count unchanged — peeling only ever removes, so equal counts
-    * mean an identical set) and is capped at `maxRounds` to match the
-    * oracle's fixed-depth recursive replay. The cap is a loud contract:
-    * a graph still shrinking at the cap would diverge from the fixpoint,
-    * so [[kcore]] requires convergence rather than returning a
-    * half-peeled set. Per round: one union-degree count (map-side
-    * combinable) + two left-semi joins, snapshot via localCheckpoint so
-    * lineage stays one round deep (the components-loop convention). */
   /** q34/q36's bounded co-purchase edge list (`a < b`, ≥ 2 shared
     * orders) — factored so the cap-headroom pin peels the REAL fixture
     * graph, not a re-derivation. */
@@ -1529,40 +1511,42 @@ object Relational {
       .select(col("pa").as("a"), col("pb").as("b"))
   }
 
+  /** k-core by iterative peeling over an undirected edge list (`a < b`
+    * per row, no duplicates) — the engine behind `q36_kcore`, factored so
+    * specs can drive hand-built graphs. Each round drops every edge with
+    * an endpoint of degree < k; the loop exits early at the fixpoint
+    * (edge count unchanged — peeling only ever removes, so equal counts
+    * mean an identical set — or no edge left) and is capped at
+    * `maxRounds` to match the oracle's fixed-depth recursive replay. The
+    * cap is a loud contract: a graph still shrinking at the cap would
+    * diverge from the fixpoint, so the loop fails rather than returning a
+    * half-peeled set. Per round: one union-degree count (map-side
+    * combinable) + two left-semi joins. */
   private[graft] def kcore(edges0: DataFrame, k: Int,
                            maxRounds: Int): DataFrame =
     kcoreWithRounds(edges0, k, maxRounds)._1
 
   /** [[kcore]] plus the realized peel depth (rounds until fixpoint,
-    * counting the final no-change confirmation round) — the
+    * counting the final no-change confirmation round, which a graph
+    * peeled to no edge skips) — the
     * instrumentation behind the CAP-HEADROOM pin: the 20-round cap is
     * loud but data-dependent, so `KcoreSpec` asserts the fixture graphs
     * converge with documented headroom (sf0.01 cascades 11 rounds
     * incl. confirmation; peel depth is structural — longest pendant
-    * cascade — not corpus-size-driven, which the sf0.1 assertion
+    * cascade — not corpus-size-driven, which the sf0.01 assertion
     * demonstrates on 10× the data). */
   private[graft] def kcoreWithRounds(edges0: DataFrame, k: Int,
                                      maxRounds: Int): (DataFrame, Int) = {
-    val snap: DataFrame => DataFrame = df => df.localCheckpoint(eager = true)
-    var edges = snap(edges0)
-    var m = edges.count()
-    var rounds = 0
-    var converged = m == 0L
-    while (!converged && rounds < maxRounds) {
+    val (edges, rounds) = graft.Fixpoint.iterate("kcore", edges0,
+        maxRounds, failAtCap = true) { edges =>
       val deg = edges.select(col("a").as("v"))
         .union(edges.select(col("b").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("deg"))
       val good = deg.filter(col("deg") >= k).select(col("v"))
-      val next = snap(edges
+      edges
         .join(good.select(col("v").as("a")), Seq("a"), "left_semi")
-        .join(good.select(col("v").as("b")), Seq("b"), "left_semi"))
-      val m2 = next.count()
-      converged = m2 == m
-      edges = next; m = m2; rounds += 1
-    }
-    require(converged || m == 0L,
-      s"kcore() still peeling after $rounds rounds ($m edges) — raise " +
-        "maxRounds (and the oracle's replay depth) for this graph")
+        .join(good.select(col("v").as("b")), Seq("b"), "left_semi")
+    }(count(lit(1)), (last, m) => m == last || m == 0L)
     (edges.select(col("a").as("v")).union(edges.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
       .orderBy(col("v")), rounds)
@@ -1571,9 +1555,7 @@ object Relational {
   /** Deterministic synchronous label propagation over an undirected
     * edge set — see the `q42_label_communities` gate comment for the
     * update rule and determinism contract. Each round reads only the
-    * PREVIOUS round's label table (synchronous), so the loop is
-    * `rounds` joins deep; `localCheckpoint` keeps the physical lineage
-    * one round deep, the kcore/BFS convention. The argmax is a
+    * PREVIOUS round's label table (synchronous). The argmax is a
     * map-side-combinable `max(struct(count, −label))` (struct min/max
     * combine associatively field-by-field — no per-node window), which
     * unlike the 2²⁰ packed-decimal convention is closed over the FULL
@@ -1582,27 +1564,29 @@ object Relational {
     * domain guard fires exactly where a big corpus lives. */
   private[graft] def labelCommunities(edges0: DataFrame,
                                       rounds: Int): DataFrame = {
-    val snap: DataFrame => DataFrame = df => df.localCheckpoint(eager = true)
     // The orientation table is the BIG side of every round's join and its
     // join key never changes — hash-partition it by that key ONCE before
-    // the snapshot (localCheckpoint preserves outputPartitioning), so each
+    // the persist (the cached frame keeps its outputPartitioning), so each
     // of the `rounds` joins shuffles only the vertex-sized label table
     // instead of re-exchanging the 2m-row orientation table per round
     // (guide §2.4: two operations keyed the same way share one exchange).
-    val nbrs = snap(edges0.select(col("a").as("node"), col("b").as("nbr"))
-      .union(edges0.select(col("b").as("node"), col("a").as("nbr")))
-      .repartition(col("nbr")))
-    var lbl = nbrs.select(col("node")).distinct()
+    val nbrs = graft.Caching.persistTracked(
+      edges0.select(col("a").as("node"), col("b").as("nbr"))
+        .union(edges0.select(col("b").as("node"), col("a").as("nbr")))
+        .repartition(col("nbr")))
+    val seed = nbrs.select(col("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    for (_ <- 1 to rounds) {
-      lbl = snap(nbrs
+    // a fixed horizon, not a fixpoint: the measure never stops the loop
+    val (lbl, _) = graft.Fixpoint.iterate("lpa", seed, rounds,
+        failAtCap = false) { lbl =>
+      nbrs
         .join(lbl.select(col("node").as("nbr"), col("label")), "nbr")
         .groupBy(col("node"), col("label"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("node"))
         .agg(max(struct(col("c"), (-col("label")).as("neg"))).as("m"))
-        .select(col("node"), (-col("m.neg")).cast("long").as("label")))
-    }
+        .select(col("node"), (-col("m.neg")).cast("long").as("label"))
+    }(count(lit(1)), (_, _) => false)
     lbl.select(col("node"), col("label").as("community"))
       .orderBy(col("node"))
   }

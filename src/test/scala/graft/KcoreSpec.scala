@@ -51,7 +51,7 @@ class KcoreSpec extends SparkSpec {
     val path = (0L to 7L).map(i => (i, i + 1)).dropRight(1)
     val ex = intercept[IllegalArgumentException](
       core(path, k = 2, maxRounds = 1))
-    assert(ex.getMessage.contains("still peeling"))
+    assert(ex.getMessage.contains("kcore did not converge"))
     Caching.releaseAll(); spark.catalog.clearCache()
   }
 
