@@ -5,7 +5,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -197,27 +200,40 @@ object GraftFunctions {
       "graft_bpe_decode"),
     (children: Seq[Expression]) => GraftBpeDecode(children(0)))
 
-  private val all = Seq(dotInfo, dotlInfo, cosKeyInfo, srpBandsInfo, shinglesInfo,
-    shingleHashesInfo, simhashInfo, simhashWideInfo, minhashSigInfo,
-    termCountsInfo, winnowInfo, bigramCountsInfo, topBigramInfo,
-    gramHashesInfo, bpeEncodeInfo, bpeDecodeInfo)
+  // Every `graft_*` function, optimizer rule and planner strategy: the one
+  // list both [[graft.GraftExtensions]] and [[ensureRegistered]] read.
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo,
+    Seq[Expression] => Expression)] = Seq(dotInfo, dotlInfo, cosKeyInfo,
+    srpBandsInfo, shinglesInfo, shingleHashesInfo, simhashInfo,
+    simhashWideInfo, minhashSigInfo, termCountsInfo, winnowInfo,
+    bigramCountsInfo, topBigramInfo, gramHashesInfo, bpeEncodeInfo,
+    bpeDecodeInfo)
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(
+    graft.plans.LevenshteinThresholdRule, graft.plans.PartitionTermCountsRule)
+  val strategies: Seq[SparkStrategy] =
+    Seq(graft.plans.PartitionTermCountsStrategy)
 
   /** Idempotent per-session registration — works on any session, including
     * ones built without [[graft.GraftExtensions]]. Also attaches the
-    * engine's optimizer rules through the experimental hook (extension-
-    * built sessions get them via `injectOptimizerRule`; the rules are
-    * self-idempotent so double registration is harmless). */
+    * engine's optimizer rules and strategies through the experimental hooks
+    * (extension-built sessions get them injected; the rules match only
+    * their own input shapes, so running one twice is harmless). */
   def ensureRegistered(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    all.foreach { info =>
+    functions.foreach { info =>
       if (!reg.functionExists(info._1)) {
         reg.registerFunction(info._1, info._2, info._3)
       }
     }
     val rules = spark.experimental.extraOptimizations
-    if (!rules.contains(graft.plans.LevenshteinThresholdRule)) {
+    if (!optimizerRules.forall(rules.contains)) {
       spark.experimental.extraOptimizations =
-        rules :+ graft.plans.LevenshteinThresholdRule
+        rules ++ optimizerRules.filterNot(rules.contains)
+    }
+    val planners = spark.experimental.extraStrategies
+    if (!strategies.forall(planners.contains)) {
+      spark.experimental.extraStrategies =
+        planners ++ strategies.filterNot(planners.contains)
     }
   }
 

@@ -133,62 +133,51 @@ object TextHashKernels {
     new Tokens(buf, starts, hashes, n)
   }
 
-  /** The distinct k-grams of `t` with their counts, in first-occurrence
-    * order: an open-addressing table (linear probing, load ≤ 1/2, doubled
-    * as it fills) over entries keyed by (hash, offset, length) into the
-    * token buffer — no String, no boxing. A gram's hash folds its tokens'
-    * hashes, so no byte is hashed twice. */
-  private final class GramCounts(t: Tokens, k: Int) {
-    val buf: Array[Byte] = t.buf
-    private val grams = math.max(t.n - k + 1, 0)
-    // entry index + 1, 0 = free; more than 2 slots per gram up to 4096
-    // grams, so a document of that size never grows the table
-    private var slots =
-      new Array[Int](Integer.highestOneBit(math.min(grams, 4096) * 4 | 8))
+  /** Byte-slice keys with their counts, in first-occurrence order: an
+    * open-addressing table (linear probing, load ≤ 1/2, doubled as it fills
+    * up to `maxSize` entries) over entries keyed by (hash, offset, length)
+    * into the byte array `keyBuf` — no String, no boxing. A subclass says
+    * where a new key's bytes live ([[store]]). */
+  private[graft] abstract class SliceCounts(initialSlots: Int, maxSize: Int) {
+    protected var keyBuf: Array[Byte] = _
+    // entry index + 1, 0 = free
+    private var slots = new Array[Int](initialSlots)
     private var hashes = new Array[Int](slots.length / 2)
     var from = new Array[Int](slots.length / 2)
     var len = new Array[Int](slots.length / 2)
     var count = new Array[Long](slots.length / 2)
     var size = 0
 
-    locally {
-      var i = 0
-      while (i < grams) {
-        var h = t.hashes(i)
-        var j = 1
-        while (j < k) { h = 31 * h + t.hashes(i + j); j += 1 }
-        h *= 0x9e3779b1
-        add(h ^ (h >>> 16), t.from(i), t.len(i, k))
-        i += 1
-      }
-    }
+    /** The offset in `keyBuf` of a new key equal to `src[f, f + l)`. */
+    protected def store(src: Array[Byte], f: Int, l: Int): Int
 
-    private def add(h: Int, f: Int, l: Int): Unit = {
+    /** Counts one occurrence of the key `src[f, f + l)` with hash `h`. */
+    protected final def add(h: Int, src: Array[Byte], f: Int, l: Int): Unit = {
       val mask = slots.length - 1
       var p = h & mask
       var e = slots(p) - 1
       while (e >= 0) {
-        if (hashes(e) == h && len(e) == l && sameBytes(from(e), f, l)) {
-          count(e) += 1
+        if (hashes(e) == h && len(e) == l && sameBytes(from(e), src, f, l)) {
+          count(e) = Math.addExact(count(e), 1L)
           return
         }
         p = (p + 1) & mask
         e = slots(p) - 1
       }
       hashes(size) = h
-      from(size) = f
+      from(size) = store(src, f, l)
       len(size) = l
       count(size) = 1
       size += 1
       slots(p) = size
-      if (2 * size == slots.length) grow()
+      if (2 * size == slots.length && size < maxSize) grow()
     }
 
     /** A plain loop: on grams of a few bytes it measured faster than
       * `Arrays.equals`' vectorized compare. */
-    private def sameBytes(a: Int, b: Int, l: Int): Boolean = {
+    private def sameBytes(a: Int, src: Array[Byte], b: Int, l: Int): Boolean = {
       var i = 0
-      while (i < l) { if (buf(a + i) != buf(b + i)) return false; i += 1 }
+      while (i < l) { if (keyBuf(a + i) != src(b + i)) return false; i += 1 }
       true
     }
 
@@ -209,8 +198,45 @@ object TextHashKernels {
       }
     }
 
+    /** Empties the table, keeping its arrays. */
+    protected def clear(): Unit = {
+      java.util.Arrays.fill(slots, 0)
+      size = 0
+    }
+
     def key(e: Int): UTF8String =
-      UTF8String.fromAddress(buf, Platform.BYTE_ARRAY_OFFSET + from(e), len(e))
+      UTF8String.fromAddress(keyBuf, Platform.BYTE_ARRAY_OFFSET + from(e), len(e))
+  }
+
+  /** Token hash → table hash (a Fibonacci multiply, then the high half
+    * folded down). */
+  @inline private def spread(h: Int): Int = {
+    val m = h * 0x9e3779b1
+    m ^ (m >>> 16)
+  }
+
+  /** The distinct k-grams of `t` with their counts, in first-occurrence
+    * order, keyed in place into the token buffer. A gram's hash folds its
+    * tokens' hashes, so no byte is hashed twice. More than 2 slots per gram
+    * up to 4096 grams, so a document of that size never grows the table. */
+  private final class GramCounts(t: Tokens, k: Int) extends SliceCounts(
+      Integer.highestOneBit(math.min(math.max(t.n - k + 1, 0), 4096) * 4 | 8),
+      Int.MaxValue) {
+    keyBuf = t.buf
+    def buf: Array[Byte] = t.buf
+
+    protected def store(src: Array[Byte], f: Int, l: Int): Int = f
+
+    locally {
+      var i = 0
+      while (i <= t.n - k) {
+        var h = t.hashes(i)
+        var j = 1
+        while (j < k) { h = 31 * h + t.hashes(i + j); j += 1 }
+        add(spread(h), t.buf, t.from(i), t.len(i, k))
+        i += 1
+      }
+    }
 
     def keys: ArrayData = {
       val out = new Array[AnyRef](size)
@@ -227,6 +253,70 @@ object TextHashKernels {
       * the [a-z ] gram alphabet. */
     def compare(a: Int, b: Int): Int = java.util.Arrays.compareUnsigned(
       buf, from(a), from(a) + len(a), buf, from(b), from(b) + len(b))
+  }
+
+  /** In-mapper combining: the term counts of many documents in one table —
+    * the reference's map side, which counts a whole chunk before it emits
+    * anything (`slave.cc:101-152`). Each document runs through the one
+    * tokenizer; a new term's bytes are copied into the table's own arena,
+    * so the table outlives the documents that filled it.
+    *
+    * Memory bound: at most [[TermTable.MaxEntries]] terms and, past
+    * [[TermTable.MaxArenaBytes]] of key bytes, no new term. [[add]] stops
+    * counting when the table is [[full]] and leaves the rest of the
+    * document [[pending]]; the caller emits the entries, calls [[reset]]
+    * and then [[resume]], the way a partial aggregate falls back when its
+    * hash map fills. Counts add with `Math.addExact`. */
+  private[graft] final class TermTable
+      extends SliceCounts(1024, TermTable.MaxEntries) {
+    keyBuf = new Array[Byte](8192)
+    private var used = 0
+    private var doc: Tokens = _
+    private var next = 0
+
+    protected def store(src: Array[Byte], f: Int, l: Int): Int = {
+      if (used + l > keyBuf.length) keyBuf =
+        java.util.Arrays.copyOf(keyBuf, math.max(2 * keyBuf.length, used + l))
+      System.arraycopy(src, f, keyBuf, used, l)
+      used += l
+      used - l
+    }
+
+    def full: Boolean =
+      size == TermTable.MaxEntries || used >= TermTable.MaxArenaBytes
+
+    /** Whether the last document still has uncounted tokens. */
+    def pending: Boolean = doc != null
+
+    /** Counts the tokens of `s` until the table is full. */
+    def add(s: UTF8String): Unit = {
+      doc = tokenize(s)
+      next = 0
+      resume()
+    }
+
+    /** Counts the pending document's remaining tokens until the table is
+      * full. */
+    def resume(): Unit = {
+      val t = doc
+      while (next < t.n && !full) {
+        add(spread(t.hashes(next)), t.buf, t.from(next), t.len(next, 1))
+        next += 1
+      }
+      if (next == t.n) doc = null
+    }
+
+    /** Empties the table; keys returned by [[key]] before this call must
+      * have been copied. A pending document stays pending. */
+    def reset(): Unit = {
+      clear()
+      used = 0
+    }
+  }
+
+  private[graft] object TermTable {
+    val MaxEntries: Int = 1 << 16
+    val MaxArenaBytes: Int = 1 << 20
   }
 
   /** Distinct space-joined 3-word shingles, first-occurrence order —

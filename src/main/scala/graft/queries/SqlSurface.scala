@@ -135,7 +135,7 @@ object SqlSurface {
   val queries: Map[String, Q] = Map(
     // ---- the flagship word count, as a SQL string (lateral explode of
     // the native per-doc term map + agg + top-N — Catalyst plans the same
-    // bounded heap)
+    // partition-level term counts and bounded heap)
     "sql_wordcount_topn" -> sql("""
       SELECT word, sum(tf) AS cnt
       FROM documents LATERAL VIEW explode(graft_term_counts(text)) t AS word, tf

@@ -11,9 +11,11 @@ import org.apache.spark.sql.functions._
   * observable query — scan → tokenize (maximal alpha runs,
   * `/root/reference/slave.cc:77-98`) → count-by-word
   * (`/root/reference/slave.cc:101-152`) → global top-N by count
-  * (`/root/reference/master.cc:585-669`) — as one plan: scan → Generate
-  * (explode of the native `graft_term_counts` per-doc term map: one byte
-  * pass, repeats combined) → partial agg → shuffle → final agg →
+  * (the reference's `master.cc:585-669`) — as one plan: scan →
+  * PartitionTermCounts (the explode of the native `graft_term_counts`
+  * per-doc term map, rewritten by `graft.plans.PartitionTermCountsRule`
+  * to count every document of a partition into one table, as the
+  * reference's map side does) → partial agg → shuffle → final agg →
   * TakeOrderedAndProject, with the reference's bounded-heap top-k.
   *
   * The rest are the training-data-pipeline text operators: token counting,
@@ -215,8 +217,12 @@ object TextOps {
       .select(col("doc_id"), col("nbr"), col("cosine"))
   }
 
-  /** Corpus word counts `(word, cnt bigint)`, unordered: the partial
-    * aggregate sums per-document term frequencies, not single tokens. */
+  /** Corpus word counts `(word, cnt bigint)`, unordered. Written as the
+    * sum of per-document term frequencies; the optimizer plans it as
+    * scan → PartitionTermCounts (one term table per partition,
+    * [[graft.plans.PartitionTermCountsRule]]) → partial agg → shuffle →
+    * final agg, so the partial aggregate sees each term once per
+    * partition. */
   private def wordCounts(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(s)
     Tables.documents(s, d)

@@ -46,6 +46,8 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects the function at session build time") {
+    // ... and every other graft_* function, the optimizer rules and the
+    // planner strategy, from the one list ensureRegistered reads too
     // getOrCreate() returns the existing default session (where earlier
     // tests may have called ensureRegistered) — clear it first so a truly
     // FRESH session is built with the extensions applied
@@ -63,6 +65,30 @@ class DotProductSpec extends SparkSpec {
       val v = Seq((Seq(2.0f, 3.0f), Seq(4.0f, 5.0f))).toDF("a", "b")
         .selectExpr("graft_dot(a, b)").as[Double].head()
       assert(v === 23.0)
+      for (name <- Seq("graft_dot", "graft_dotl", "graft_cos_key",
+          "graft_srp_bands", "graft_shingles", "graft_shingle_hashes",
+          "graft_simhash", "graft_simhash_wide", "graft_minhash_sig",
+          "graft_term_counts", "graft_winnow", "graft_bigram_counts",
+          "graft_top_bigram", "graft_gram_hashes", "graft_bpe_encode",
+          "graft_bpe_decode")) {
+        assert(s2.catalog.functionExists(name), s"$name does not resolve")
+      }
+      // nothing went through the experimental hooks: the rule and the
+      // strategy below come from the extension alone
+      assert(s2.experimental.extraOptimizations.isEmpty)
+      assert(s2.experimental.extraStrategies.isEmpty)
+      assert(s2.sessionState.planner.strategies
+        .contains(graft.plans.PartitionTermCountsStrategy))
+      val docs = TempLayouts.tracked("graft-ext").toString + "/docs"
+      Seq("a rose is a rose", "is it").toDF("text").write.parquet(docs)
+      s2.read.parquet(docs).createOrReplaceTempView("documents")
+      val wc = s2.sql("""SELECT word, sum(tf) AS cnt FROM documents
+        LATERAL VIEW explode(graft_term_counts(text)) t AS word, tf
+        GROUP BY word""")
+      assert(wc.queryExecution.optimizedPlan.exists(
+        _.isInstanceOf[graft.plans.PartitionTermCounts]))
+      assert(wc.queryExecution.executedPlan.toString
+        .contains("PartitionTermCounts"))
     } finally {
       // the new session shares the JVM-wide SparkContext — do NOT stop it,
       // just restore the suite session as active/default

@@ -59,26 +59,23 @@ class KcoreSpec extends SparkSpec {
     assert(core(Seq.empty, k = 3).isEmpty)
   }
 
-  test("cap headroom: the fixture co-purchase graphs converge well " +
-    "under the 20-round cap, and peel depth is structural, not " +
-    "size-driven") {
-    // The q36 cap is loud but data-dependent (the r10 verdict's
-    // hardening item): pin the REALIZED peel depth of the real gated
-    // graphs so corpus growth approaching the cap fails here first.
-    // sf0.001's graph historically cascades ~11 rounds (incl. the
-    // confirmation round); 14 leaves >= 6 rounds of headroom under the
-    // cap of 20 — and the 10x corpus (sf0.01) must not peel deeper than
-    // the small one by more than the slack, because depth follows the
-    // longest pendant cascade (graph structure), not row count.
+  test("cap headroom: sf0.01 peels well under the 20-round cap") {
+    // The q36 cap is loud but data-dependent: pin the REALIZED peel depth
+    // of the gated graphs so corpus growth approaching the cap fails here
+    // first. sf0.01 cascades 11 rounds (incl. the confirmation round);
+    // 14 leaves 6 rounds of headroom under the cap of 20. sf0.001 peels
+    // nothing (2324 -> 2324 edges), so it converges in one round and
+    // carries no headroom bound of its own.
     val (coreSmall, rSmall) = graft.queries.Relational.kcoreWithRounds(
       graft.queries.Relational.copurchaseEdges(spark, "/root/testdata/sf0.001"),
       k = 3, maxRounds = 20)
     assert(coreSmall.count() >= 0L)
-    assert(rSmall <= 14, s"sf0.001 peel depth $rSmall erodes the cap")
+    assert(rSmall == 1, s"sf0.001 peel depth $rSmall: no longer a fixpoint")
     val (coreMid, rMid) = graft.queries.Relational.kcoreWithRounds(
       graft.queries.Relational.copurchaseEdges(spark, "/root/testdata/sf0.01"),
       k = 3, maxRounds = 20)
     assert(coreMid.count() >= 0L)
+    assert(rMid > 1, s"sf0.01 peel depth $rMid: the graph no longer peels")
     assert(rMid <= 14, s"sf0.01 peel depth $rMid erodes the cap")
     info(s"peel depth: sf0.001 = $rSmall rounds, sf0.01 = $rMid rounds " +
       "(cap 20)")

@@ -3,6 +3,7 @@ package graft
 import graft.queries.TextOps
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** Large-document execution: per-doc kernel work (shingles, simhash,
@@ -13,7 +14,7 @@ import org.apache.spark.sql.functions._
   * thing that blows up there is the DuckDB ORACLE's declarative replay
   * of the per-doc kernels, a test-harness artifact, which is why this
   * spec asserts engine execution rather than oracle parity.) */
-class LargeDocSpec extends SparkSpec {
+class LargeDocSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def corpus(prefix: String, texts: Seq[String]): String = {
     import spark.implicits._
@@ -72,13 +73,25 @@ class LargeDocSpec extends SparkSpec {
   }
 
   test("wordcount_full counts a document of >100k distinct words exactly") {
+    // ... crossing the partition term table's entry cap on the way
     val reference: DataFrame = Tables.documents(spark, wideDir)
       .select(explode(TextOps.tokens(col("text"))).as("word"))
       .groupBy(col("word"))
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("word"))
-    val got = SparkEntry.queries("wordcount_full")(spark, wideDir).collect()
+    val df = SparkEntry.queries("wordcount_full")(spark, wideDir)
+    val got = df.collect()
     assert(got.length === 120002)
     assert(got.toSeq == reference.collect().toSeq)
+    val counts = collect(df.queryExecution.executedPlan) {
+      case e: graft.plans.PartitionTermCountsExec => e }
+    assert(counts.size === 1)
+    val flushes = counts.head.metrics("numFlushes").value
+    assert(flushes >= 1, "120k distinct words never reached the table cap")
+    // each flush re-emits the terms seen since the last one, so the table
+    // emits more rows than there are distinct words
+    assert(counts.head.metrics("numOutputRows").value > 120002L)
+    info(s"$flushes flush(es), " +
+      s"${counts.head.metrics("numOutputRows").value} rows emitted")
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, GenerateExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -42,12 +42,18 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("flagship word count tokenizes with the native kernel and " +
     "combines map-side below its one exchange (DataFrame and SQL)") {
+    // map-side = once per partition, in PartitionTermCountsExec, then in
+    // Spark's partial aggregate
     for (name <- Seq("wordcount_topn", "sql_wordcount_topn")) {
       val df = SparkEntry.queries(name)(spark, d)
       df.collect()
       val exec = df.queryExecution.executedPlan
       val p = exec.treeString
-      assert(p.contains("graft_term_counts"), s"$name: native tokenizer missing")
+      val counts = collect(exec) {
+        case e: graft.plans.PartitionTermCountsExec => e }
+      assert(counts.size == 1, s"$name: no partition-level term counts")
+      assert(collect(exec) { case g: GenerateExec => g }.isEmpty,
+        s"$name: a Generate is back in the plan")
       assert(p.contains("TakeOrderedAndProject"), s"$name: no bounded heap")
       assert(!p.contains("split("), s"$name: regex split back in the plan")
       val exchanges = collect(exec) { case e: ShuffleExchangeExec => e }
@@ -56,7 +62,12 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         if a.aggregateExpressions.nonEmpty &&
           a.aggregateExpressions.forall(_.mode == Partial) => a }
       assert(partial.nonEmpty, s"$name: no partial aggregate below the exchange")
+      assert(exchanges.head.collect {
+        case e: graft.plans.PartitionTermCountsExec => e }.nonEmpty,
+        s"$name: the term counts are not below the exchange")
     }
+    // the dedup posting explodes are not term sums: the rule gives up there
+    assert(!plan("dedup_minhash_lsh").contains("PartitionTermCounts"))
   }
 
   test("similarity rank windows push the rank filter into a bounded " +

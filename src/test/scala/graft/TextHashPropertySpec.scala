@@ -181,6 +181,21 @@ object TextHashPropertySpec extends Properties("TextHashKernels") {
       }
     }
 
+  property("TermTable over many documents == their summed frequency maps, " +
+    "keys owned by the table") =
+    Prop.forAll(Gen.listOf(genText)) { docs =>
+      val table = new TextHashKernels.TermTable
+      val inputs = docs.map(inPlace)
+      inputs.foreach(table.add)
+      // the table copied its keys: wiping every source buffer changes none
+      inputs.foreach(u => java.util.Arrays.fill(
+        u.getBaseObject.asInstanceOf[Array[Byte]], 'z'.toByte))
+      val got = (0 until table.size).toList
+        .map(e => table.key(e).toString -> table.count(e))
+      !table.pending && !table.full &&
+        got == firstOccurrenceCounts(docs.flatMap(refTokens))
+    }
+
   /** Every kernel's result on `u`, each read back on demand. */
   private def results(u: UTF8String): List[() => Any] = {
     val sh = TextHashKernels.shingles(u)
