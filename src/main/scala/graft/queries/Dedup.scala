@@ -30,9 +30,11 @@ import org.apache.spark.sql.types.DecimalType
   *  - MinHash-LSH reduces candidates further: 16 permutations banded 4×4,
   *    so only pairs agreeing on a full band (J ≈ 0.7+) collide;
   *  - pair verification (exact Jaccard) touches only candidate pairs;
-  *  - shared postings/signature frames are persisted once and re-read by
-  *    the self-joins (the local-mode analog of staging the inverted index
-  *    to storage between cluster jobs).
+  *  - the self-joins' inputs (capped postings, LSH buckets) are
+  *    hash-partitioned on the join key, then persisted: each is shuffled
+  *    once, and both join sides read the cache with no exchange (the
+  *    local-mode analog of staging a partitioned inverted index to
+  *    storage between cluster jobs).
   */
 object Dedup {
 
@@ -45,24 +47,11 @@ object Dedup {
                         textCol: String): DataFrame =
     docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
 
-  /** (doc_id, shingles): distinct 3-word shingles over the shared
-    * tokenizer, via the native codegen'd kernel (the declarative
-    * `zip_with`-of-slices form runs interpreted per element; equivalence
-    * is pinned in TextHashSpec). */
-  private def docShingles(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    docs.select(col("doc_id"),
-      graft.functions.GraftFunctions.shingles(col("text")).as("shingles"))
-  }
-
-  /** Join candidate pairs to per-doc set sizes (doc_id, n) and keep those
+  /** Keep the candidate pairs (a, b, common, na, nb) of [[cappedCommon]]
     * with Jaccard >= minJ. Unsorted — callers that surface the pairs add
     * the total sort; graph consumers (components) skip it. */
-  private def jaccardFilter(common: DataFrame, sizes: DataFrame,
-                            minJ: Double): DataFrame =
+  private def jaccardFilter(common: DataFrame, minJ: Double): DataFrame =
     common
-      .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), "a")
-      .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), "b")
       .withColumn("jaccard",
         col("common") * lit(1.0) / (col("na") + col("nb") - col("common")))
       .filter(col("jaccard") >= minJ)
@@ -119,25 +108,34 @@ object Dedup {
   private[graft] def jaccardPairsUnsorted(docs: DataFrame, minJ: Double,
                                           idCol: String = "doc_id",
                                           textCol: String = "text"): DataFrame = {
-    val (common, sizes) = cappedCommon(docs, idCol, textCol)
-    jaccardFilter(common, sizes, minJ)
+    jaccardFilter(cappedCommon(docs, idCol, textCol), minJ)
   }
 
   /** The shared candidate machinery of the pairwise near-dup family:
     * df-capped hashed-shingle postings self-joined into per-pair
-    * intersection counts, plus the per-doc distinct-shingle-set sizes.
-    * Consumers apply their own similarity filter (symmetric Jaccard or
-    * asymmetric containment) — the candidate cost is identical. */
+    * intersection counts, (a, b, common, na, nb) with a < b, where na and
+    * nb are the two documents' distinct-shingle-set sizes. Consumers apply
+    * their own similarity filter (symmetric Jaccard or asymmetric
+    * containment) — the candidate cost is identical.
+    *
+    * Each posting carries its document's set size, (doc_id, n, h), so the
+    * pair aggregation reads both sizes off the joined rows and no consumer
+    * joins a size table back. The capped postings are hash-partitioned on
+    * h BEFORE the persist: the self-join reads the cached table on both
+    * sides with no exchange between either side and the cache, so the
+    * postings shuffle once, into the cache, and the only exchange after it
+    * is the pair aggregation's. */
   private def cappedCommon(docs: DataFrame, idCol: String,
-                           textCol: String): (DataFrame, DataFrame) = {
+                           textCol: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     // the per-doc shingle-hash kernel is the expensive projection and is
-    // read by THREE consumers (df count, capped postings, set sizes) —
-    // persist it once so the kernel runs one corpus pass, not three
+    // read by TWO consumers (df count, capped postings) — persist it once
+    // so the kernel runs one corpus pass, not two
     val sh = graft.Caching.persistTracked(
       normalize(docs, idCol, textCol).select(col("doc_id"),
         graft.functions.GraftFunctions.shingleHashes(col("text")).as("hs")))
-    val inv = sh.select(col("doc_id"), explode(col("hs")).as("h"))
+    val inv = sh.select(col("doc_id"), size(col("hs")).as("n"),
+      explode(col("hs")).as("h"))
     // df cap via a map-side-combinable groupBy(h).count() reduced to the
     // tiny OVER-cap blocklist, broadcast anti-joined against the postings.
     // A `count over (partition by h)` window also computes df in one
@@ -156,24 +154,22 @@ object Dedup {
       .agg(count(lit(1)).as("df"))
       .filter(col("df") > DfCap)
       .select(col("h"))
-    val invCapped = graft.Caching.persistTracked(
-      inv.join(broadcast(overCap), Seq("h"), "left_anti"))
-    // SELF-join strategy pinned to shuffle-hash (guide §3.1): both sides
-    // are the SAME cached frame, so the shuffle form computes ONE
-    // Exchange and reuses it on both sides (ReuseExchange), while the
-    // auto-broadcast the planner picks at fixture size builds the whole
-    // posting table into a HashedRelation in a single serial task AND
-    // executes the cached subplan a second time for the build side
-    // (measured 1.0 s -> 0.42 s at sf0.1). At corpus scale the postings
-    // can never broadcast, so shuffle-hash is also the only plan that
-    // survives — the hint removes a local/scale plan divergence.
-    val common = invCapped.select(col("doc_id").as("a"), col("h"))
+    val postings = graft.Caching.persistTracked(
+      inv.join(broadcast(overCap), Seq("h"), "left_anti")
+        .repartition(col("h")))
+    // shuffle-hash pinned: both sides are the cached, h-partitioned
+    // postings, so the join needs no exchange; unhinted, the planner
+    // broadcasts the cached table at fixture size (a serial build of the
+    // whole posting list), and at corpus scale the postings can never
+    // broadcast
+    postings.select(col("doc_id").as("a"), col("n").as("na"), col("h"))
       .hint("shuffle_hash")
-      .join(invCapped.select(col("doc_id").as("b"), col("h")), "h")
+      .join(postings.select(col("doc_id").as("b"), col("n").as("nb"),
+        col("h")), "h")
       .filter(col("a") < col("b"))
       .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("common"))
-    (common, sh.select(col("doc_id"), size(col("hs")).as("n")))
+      .agg(count(lit(1)).as("common"), max(col("na")).as("na"),
+        max(col("nb")).as("nb"))
   }
 
   /** Containment near-dup pairs (asymmetric Jaccard |A∩B|/|A|): catches
@@ -188,10 +184,7 @@ object Dedup {
                        idCol: String = "doc_id",
                        textCol: String = "text"): DataFrame = {
     val gridC = math.round(minC * 1e6)
-    val (common, sizes) = cappedCommon(docs, idCol, textCol)
-    common
-      .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), "a")
-      .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), "b")
+    cappedCommon(docs, idCol, textCol)
       .filter(expr(s"(common * 1000000) div na >= $gridC OR " +
         s"(common * 1000000) div nb >= $gridC"))
       .select(col("a").as("doc_a"), col("b").as("doc_b"), col("common"),
@@ -205,91 +198,102 @@ object Dedup {
     * h_i = h1 + i*h2 over ONE md5 per shingle (h1: 60 bits, h2: 32 bits →
     * no 64-bit overflow), computed per document by the native
     * `graft_minhash_sig` kernel — no posting explode, no signature
-    * groupBy: the only shuffles left are the tiny band self-join (4 rows
-    * per doc) and the candidate joins. Verification intersects the two
-    * persisted HASHED shingle sets (`array_intersect` over the distinct
-    * 60-bit `graft_shingle_hashes` arrays — the same hashed-set
-    * convention as [[jaccardPairsUnsorted]], counted identically in the
-    * oracle), so candidates never re-join the posting table and the two
-    * verification joins shuffle 8-byte elements instead of ~20-byte
-    * strings. Measured on the 10× scale-curve corpus: verification was
-    * the operator's steepest-scaling stage (2.8 s of a 4.1 s total) with
-    * string arrays — the hashed form cuts its shuffle bytes ~60%. The
-    * signature projection deliberately re-runs the text kernel instead of
-    * sharing a persisted string-shingle frame: two linear per-doc passes
-    * cost less than persisting and twice-shuffling the wide string
-    * arrays. */
+    * groupBy.
+    *
+    * Partition once by bucket, then work inside each partition: the
+    * bucket table ([[lshBuckets]]) is built in one pass over the
+    * documents, hash-partitioned on (band_id, h) and persisted, and the
+    * band self-join ([[lshCandidates]]) reads the cache on both sides
+    * with no exchange between either side and the cache. Each bucket row
+    * carries its document's hashed shingle set, so verification
+    * (`array_intersect` over the distinct 60-bit `graft_shingle_hashes`
+    * arrays — the same hashed-set convention as [[jaccardPairsUnsorted]],
+    * counted identically in the oracle) happens in the joined row: no
+    * verification join, no broadcast. A pair is emitted only from the
+    * lowest band where the two documents agree, so no `distinct` shuffle
+    * is needed either; the only exchange after the cache is the final
+    * sort's. The trade: the hashed set is copied once per band, in the
+    * shuffle and in the cache. */
   def minhashLshPairs(docs: DataFrame, minJ: Double,
                       idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    val norm = normalize(docs, idCol, textCol)
-    // verification + size table: persisted hashed shingle sets (narrow)
-    val sh = graft.Caching.persistTracked(hashedSetTable(norm))
-    // signature path: per-doc projection over the string shingles (the
-    // minhash kernel derives its own per-shingle md5s), persisted because
-    // the band SELF-join scans it from both sides — unpersisted, each
-    // side re-runs the shingle+signature kernels over the corpus
-    // (measured 3x the query at sf0.1)
-    val sig = graft.Caching.persistTracked(signatureTable(norm))
-    val bands = bandTable(sig)
-    // shuffle-hash self-join: one reused Exchange instead of a serial
-    // broadcast build of the same frame (the cappedCommon convention)
-    val cand = bands.select(col("doc_id").as("a"), col("band_id"), col("h"))
-      .hint("shuffle_hash")
-      .join(bands.select(col("doc_id").as("b"), col("band_id"), col("h")),
-        Seq("band_id", "h"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-    cand
-      .join(sh.select(col("doc_id").as("a"), col("hs").as("hs_a")), "a")
-      .join(sh.select(col("doc_id").as("b"), col("hs").as("hs_b")), "b")
-      .withColumn("common",
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long"))
-      .withColumn("jaccard", col("common") * lit(1.0) /
-        (size(col("hs_a")) + size(col("hs_b")) - col("common")))
+                      textCol: String = "text"): DataFrame =
+    withJaccard(lshCandidates(normalize(docs, idCol, textCol)))
       .filter(col("jaccard") >= minJ)
       .select(col("a").as("doc_a"), col("b").as("doc_b"), col("common"),
         col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
+
+  /** The LSH candidate pairs (a, b, hs_a, hs_b) of a corpus, a < b, each
+    * once: the band self-join of [[minhashLshPairs]], shared with the
+    * `dedup_precision_lsh` readout so it grades exactly this plan. A pair
+    * is emitted only from the LOWEST band where the two documents' band
+    * hashes agree, so every colliding pair appears once — the `distinct`
+    * over all colliding bands, without its shuffle. The bucket table is
+    * hash-partitioned on the join key before the persist, and the join
+    * is pinned to shuffle-hash: unhinted, the planner broadcasts the
+    * cached table at fixture size (a serial build task plus a broadcast
+    * exchange); at corpus scale it never fits. */
+  private def lshCandidates(norm: DataFrame): DataFrame = {
+    val buckets = graft.Caching.persistTracked(
+      lshBuckets(norm).repartition(col("band_id"), col("h")))
+    val bh = (side: String, band: Int) =>
+      element_at(col(s"$side.bh"), band + 1)
+    val lowerBandAgrees = (0 until Bands - 1).map(j =>
+      col("l.band_id") > j && bh("l", j) === bh("r", j)).reduce(_ || _)
+    buckets.hint("shuffle_hash").as("l")
+      .join(buckets.as("r"), col("l.band_id") === col("r.band_id") &&
+        col("l.h") === col("r.h") && col("l.doc_id") < col("r.doc_id") &&
+        !lowerBandAgrees)
+      .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"),
+        col("l.hs").as("hs_a"), col("r.hs").as("hs_b"))
   }
 
-  /** (doc_id, hs): the distinct 60-bit hashed shingle set per document —
-    * the verification side of the MinHash family (empty-set docs absent,
-    * as they can never verify a pair). */
-  private def hashedSetTable(norm: DataFrame): DataFrame =
-    norm.select(col("doc_id"),
-        graft.functions.GraftFunctions.shingleHashes(col("text")).as("hs"))
-      .filter(size(col("hs")) > 0)
-
-  /** (doc_id, ms): the 16-permutation MinHash signature per document via
-    * the native kernel — a pure projection over the string shingles. */
-  private def signatureTable(norm: DataFrame): DataFrame =
-    docShingles(norm).filter(size(col("shingles")) > 0)
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.minhashSig(col("shingles")).as("ms"))
-
-  /** (doc_id, band_id, h): the 4-band LSH bucket table of a signature
-    * frame — md5 over each band's comma-joined signature rows, the
-    * band-join key shared by the self-join ([[minhashLshPairs]]) and the
-    * batch-vs-corpus ([[minhashLshIncremental]]) shapes. */
-  private def bandTable(sig: DataFrame): DataFrame = {
+  /** (doc_id, hs, bh, band_id, h): the LSH bucket table, one row per
+    * (document, band). `hs` is the hashed shingle set, `bh` the 4 band
+    * hashes (md5 over each band's comma-joined signature rows) and `h` =
+    * `bh[band_id]`, the bucket key. One projection runs the two kernels
+    * once per document; the band explode reads their outputs through
+    * attributes, never re-evaluating a kernel. Documents with an empty
+    * shingle set are in no bucket: their signature is NULL (and every
+    * NULL signature would hash to the same band value), so `bh` is NULL
+    * and the explode yields nothing. No Filter is used for that: a filter
+    * on a kernel's output is pushed below the projection and re-runs the
+    * kernel. */
+  private def lshBuckets(norm: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.ensureRegistered(norm.sparkSession)
     val rowsPerBand = NumPerm / Bands
-    val bandCols = (0 until Bands).map { b =>
-      struct(lit(b).as("band_id"),
-        md5(concat_ws(",", (0 until rowsPerBand).map(r =>
-          element_at(col("ms"), b * rowsPerBand + r + 1).cast("string")): _*)
-          .cast("binary")).as("h"))
-    }
-    sig.select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_id"), col("band.h"))
+    val bandHashes = array((0 until Bands).map(b =>
+      md5(concat_ws(",", (0 until rowsPerBand).map(r =>
+        element_at(col("ms"), b * rowsPerBand + r + 1).cast("string")): _*)
+        .cast("binary"))): _*)
+    val bands = array((0 until Bands).map(b =>
+      struct(lit(b).as("band_id"), element_at(col("bh"), b + 1).as("h"))): _*)
+    norm.select(col("doc_id"),
+        graft.functions.GraftFunctions.shingleHashes(col("text")).as("hs"),
+        graft.functions.GraftFunctions.minhashSig(
+          graft.functions.GraftFunctions.shingles(col("text"))).as("ms"))
+      .select(col("doc_id"), col("hs"),
+        when(col("ms").isNotNull, bandHashes).as("bh"))
+      .select(col("doc_id"), col("hs"), col("bh"),
+        explode(when(col("bh").isNotNull, bands)).as("band"))
+      .select(col("doc_id"), col("hs"), col("bh"), col("band.band_id"),
+        col("band.h"))
   }
+
+  /** Candidate pairs (.., hs_a, hs_b) plus the verified measures `common`
+    * (hashed-set intersection) and `jaccard`. */
+  private def withJaccard(cand: DataFrame): DataFrame =
+    cand
+      .withColumn("common",
+        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long"))
+      .withColumn("jaccard", col("common") * lit(1.0) /
+        (size(col("hs_a")) + size(col("hs_b")) - col("common")))
 
   /** Incremental NEAR-dup detection — the LSH sibling of [[incremental]]
     * (which only catches byte-identical content): every (batch doc,
     * corpus doc) pair whose exact Jaccard over hashed shingle sets is
-    * >= `minJ`, found by joining the BATCH's LSH band table against the
-    * CORPUS's band table instead of a corpus self-join.
+    * >= `minJ`, found by joining the BATCH's LSH band keys against the
+    * CORPUS's band keys instead of a corpus self-join.
     *
     * The continuous-ingest scale shape: a 100 TB corpus is represented
     * by two narrow stored tables — (doc_id, 4 band hashes) and (doc_id,
@@ -301,7 +305,10 @@ object Dedup {
     * candidates only, never the corpus cross batch. Both sides' kernels
     * run exactly once; nothing is persisted because no frame is consumed
     * twice (the self-join pressure that forces [[minhashLshPairs]] to
-    * persist does not exist here). Recall is the banding family's
+    * persist does not exist here). Unlike the self-join, the band keys
+    * do not carry the hashed sets: that would shuffle every corpus
+    * document's set once per band, where the candidates' sets are joined
+    * back once. Recall is the banding family's
     * 1−(1−j⁴)⁴ (read out by `dedup_recall_lsh`); precision is exact by
     * the verification join. */
   def minhashLshIncremental(batch: DataFrame, corpus: DataFrame,
@@ -310,26 +317,34 @@ object Dedup {
     graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
     val nb = normalize(batch, idCol, textCol)
     val nc = normalize(corpus, idCol, textCol)
-    val cand = bandTable(signatureTable(nb))
-      .select(col("doc_id").as("a"), col("band_id"), col("h"))
-      .join(bandTable(signatureTable(nc))
-        .select(col("doc_id").as("b"), col("band_id"), col("h")),
-        Seq("band_id", "h"))
+    val cand = bandTable(nb).select(col("doc_id").as("a"), col("band_id"),
+        col("h"))
+      .join(bandTable(nc).select(col("doc_id").as("b"), col("band_id"),
+        col("h")), Seq("band_id", "h"))
       .select(col("a"), col("b")).distinct()
-    cand
-      .join(hashedSetTable(nb).select(col("doc_id").as("a"),
-        col("hs").as("hs_a")), "a")
-      .join(hashedSetTable(nc).select(col("doc_id").as("b"),
-        col("hs").as("hs_b")), "b")
-      .withColumn("common",
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long"))
-      .withColumn("jaccard", col("common") * lit(1.0) /
-        (size(col("hs_a")) + size(col("hs_b")) - col("common")))
+    withJaccard(cand
+        .join(hashedSetTable(nb).select(col("doc_id").as("a"),
+          col("hs").as("hs_a")), "a")
+        .join(hashedSetTable(nc).select(col("doc_id").as("b"),
+          col("hs").as("hs_b")), "b"))
       .filter(col("jaccard") >= minJ)
       .select(col("a").as("batch_doc_id"), col("b").as("corpus_doc_id"),
         col("common"), col("jaccard"))
       .orderBy(col("batch_doc_id"), col("corpus_doc_id"))
   }
+
+  /** (doc_id, band_id, h): the bucket keys of [[lshBuckets]] alone — the
+    * column pruning drops the hashed set and its kernel. */
+  private def bandTable(norm: DataFrame): DataFrame =
+    lshBuckets(norm).select(col("doc_id"), col("band_id"), col("h"))
+
+  /** (doc_id, hs): the distinct 60-bit hashed shingle set per document —
+    * the verification side of [[minhashLshIncremental]]. Empty sets are
+    * not filtered out: such documents are in no bucket, so no candidate
+    * reaches them. */
+  private def hashedSetTable(norm: DataFrame): DataFrame =
+    norm.select(col("doc_id"),
+      graft.functions.GraftFunctions.shingleHashes(col("text")).as("hs"))
 
   /** 60-bit SimHash signature per document: bitwise majority vote of token
     * hashes (h = first 60 bits of md5("99|" || token)), token multiplicity
@@ -418,7 +433,10 @@ object Dedup {
     val cand = banded
       .select(col("doc_id").as("a"), col("simhash").as("sh_a"),
         col("band_id"), col("band_val"))
-      .hint("shuffle_hash") // self-join: reuse one Exchange (§3.1)
+      // executed at sf0.001, the final plan shuffles the band table once
+      // and the other side reads it through a ReusedExchange; whether the
+      // hint pays is open (ROADMAP: re-adjudicate the shuffle_hash hints)
+      .hint("shuffle_hash")
       .join(banded.select(col("doc_id").as("b"), col("simhash").as("sh_b"),
         col("band_id"), col("band_val")), Seq("band_id", "band_val"))
       .filter(col("a") < col("b"))
@@ -450,7 +468,10 @@ object Dedup {
     val cand = banded
       .select(col("doc_id").as("a"), col("simhash").as("sh_a"),
         col("band_id"), col("band_val"))
-      .hint("shuffle_hash") // self-join: reuse one Exchange (§3.1)
+      // executed at sf0.001, the final plan shuffles the band table once
+      // and the other side reads it through a ReusedExchange; whether the
+      // hint pays is open (ROADMAP: re-adjudicate the shuffle_hash hints)
+      .hint("shuffle_hash")
       .join(banded.select(col("doc_id").as("b"), col("simhash").as("sh_b"),
         col("band_id"), col("band_val")), Seq("band_id", "band_val"))
       .filter(col("a") < col("b"))
@@ -801,37 +822,20 @@ object Dedup {
     // precision means fewer rows per band, high precision with low
     // recall means more). Same machinery as the gated LSH plan: the
     // candidate set IS `dedup_minhash_lsh`'s pre-verification band
-    // self-join (md5 signatures, so bit-stable cross-engine), the
-    // verified set the same full-hashed-set Jaccard ≥ 0.7 filter — so
-    // the metric cannot drift from the plan it grades. The readout is
-    // two 1-row aggregates cross-joined (broadcast); candidates stay
-    // bucketed by the banding bound at any corpus size.
-    "dedup_precision_lsh" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      val norm = normalize(Tables.documents(s, d), "doc_id", "text")
-      val sh = graft.Caching.persistTracked(hashedSetTable(norm))
-      val bands = bandTable(signatureTable(norm))
-      val cand = graft.Caching.persistTracked(
-        bands.select(col("doc_id").as("a"), col("band_id"), col("h"))
-          .hint("shuffle_hash") // self-join: reuse one Exchange (§3.1)
-          .join(bands.select(col("doc_id").as("b"), col("band_id"),
-            col("h")), Seq("band_id", "h"))
-          .filter(col("a") < col("b"))
-          .select(col("a"), col("b")).distinct())
-      val ver = cand
-        .join(sh.select(col("doc_id").as("a"), col("hs").as("hs_a")), "a")
-        .join(sh.select(col("doc_id").as("b"), col("hs").as("hs_b")), "b")
-        .withColumn("common",
-          size(array_intersect(col("hs_a"), col("hs_b"))).cast("long"))
-        .filter(col("common") * lit(1.0) /
-          (size(col("hs_a")) + size(col("hs_b")) - col("common")) >= 0.7)
-      val nCand = cand.agg(count(lit(1)).as("n_cand"))
-      val nVer = ver.agg(count(lit(1)).as("n_true_dup"))
-      nCand.crossJoin(broadcast(nVer))
+    // self-join (`lshCandidates`, md5 signatures, so bit-stable
+    // cross-engine), the verified set the same full-hashed-set Jaccard
+    // ≥ 0.7 test — so the metric cannot drift from the plan it grades.
+    // The readout is one global aggregate counting all candidates and
+    // the verified ones; candidates stay bucketed by the banding bound
+    // at any corpus size.
+    "dedup_precision_lsh" -> ((s, d) =>
+      withJaccard(lshCandidates(
+          normalize(Tables.documents(s, d), "doc_id", "text")))
+        .agg(count(lit(1)).as("n_cand"),
+          count(when(col("jaccard") >= 0.7, 1)).as("n_true_dup"))
         .select(col("n_cand"), col("n_true_dup"),
           expr("CAST(n_true_dup AS DOUBLE) / nullif(n_cand, 0)")
-            .as("precision"))
-    }),
+            .as("precision"))),
 
     "dedup_components" -> ((s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"))

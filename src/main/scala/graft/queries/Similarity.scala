@@ -788,7 +788,11 @@ object Similarity {
       .select(col("vec_id"), col("pos").as("band_id"), col("col").as("band_val"))
     val cand = banded
       .select(col("vec_id").as("a"), col("band_id"), col("band_val"))
-      .hint("shuffle_hash") // self-join: reuse one Exchange (§3.1)
+      // executed at sf0.001, the final plan shuffles the banded cache
+      // twice, one stage per side (no exchange reuse over a cache scan);
+      // whether the hint pays is open (ROADMAP: re-adjudicate the
+      // shuffle_hash hints)
+      .hint("shuffle_hash")
       .join(banded.select(col("vec_id").as("b"), col("band_id"),
         col("band_val")), Seq("band_id", "band_val"))
       .filter(col("a") < col("b"))

@@ -87,11 +87,12 @@ object TextOps {
       .join(broadcast(overCap), Seq("term"), "left_anti")
       .select(col("doc_id"), col("term"), col("w")))
     val norms = wc.groupBy(col("doc_id")).agg(sum(expr("w * w")).as("n2"))
-    // shuffle-hash SELF-join of the cached weighted postings: one reused
-    // Exchange instead of a serial broadcast build of the same frame
-    // (guide §3.1; the cappedCommon convention — a posting table can
-    // never broadcast at corpus scale, so this also removes a
-    // local/scale plan divergence)
+    // shuffle-hash SELF-join of the cached weighted postings: the cache
+    // comes out of the join on term, so it is already hash-partitioned
+    // on term, and the final sf0.001 plan reads it on both sides with no
+    // exchange; the hint only keeps the planner from broadcasting the
+    // cached table. Whether it pays is open (ROADMAP: re-adjudicate the
+    // shuffle_hash hints)
     wc.select(col("doc_id").as("a"), col("term"), col("w").as("wa"))
       .hint("shuffle_hash")
       .join(wc.select(col("doc_id").as("b"), col("term"),
@@ -868,7 +869,11 @@ object TextOps {
       val capped = graft.Caching.persistTracked(
         fps.join(broadcast(overCap), Seq("fp"), "left_anti"))
       capped.select(col("doc_id").as("a"), col("fp"))
-        .hint("shuffle_hash") // self-join: reuse one Exchange (§3.1)
+        // executed at sf0.001, the final plan shuffles the cached
+        // postings twice, one stage per side (no exchange reuse over a
+        // cache scan); whether the hint pays is open (ROADMAP:
+        // re-adjudicate the shuffle_hash hints)
+        .hint("shuffle_hash")
         .join(capped.select(col("doc_id").as("b"), col("fp")), "fp")
         .filter(col("a") < col("b"))
         .groupBy(col("a"), col("b"))

@@ -231,4 +231,97 @@ class DedupSpec extends SparkSpec {
     // signatures share every band, so the pair MUST surface
     assert(inc.exists(p => p._1 == 1L && p._2 == 0L))
   }
+
+  /** A corpus for the LSH banding edge cases, written like [[dir]]. X and
+    * Y are two 3-word shingles whose first MinHash permutations pick X and
+    * whose last eight pick Y (their h1 values are close and Y's h2 is
+    * smaller), so a document with both shares bands 0-1 with a document
+    * holding only X and bands 2-3 with one holding only Y. */
+  private lazy val lshDir: String = {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft-dedup-lsh").toString
+    val base = "the quick brown fox jumps over the lazy dog again and " +
+      "again while the cat watches the bird in the tall green tree today"
+    val (x, y) = ("dvvrpb zvgaef qhsy", "ctnp eyedz fmgh")
+    val docs: Seq[(Long, String)] = Seq(
+      (0L, s"$base $x $y"),
+      (1L, s"$base $x $y"), // exact dup of 0: all 4 bands
+      (2L, s"$base $x"), // bands 0-1 with 0 and 1
+      (3L, s"$base $y"), // bands 2-3 with 0 and 1
+      (4L, null), // no shingles: NULL signature, in no bucket
+      (5L, ""),
+      (6L, "two words"),
+      (7L, "three"),
+      (8L, "completely different content about spark engines and whales " +
+        "swimming through oceans of data at scale"))
+    docs.toDF("doc_id", "text")
+      .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
+    d
+  }
+
+  test("minhash-LSH equals its brute-force definition over the kernels' " +
+    "outputs, and the precision readout counts the same candidates") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
+    val kern = Tables.documents(spark, lshDir)
+      .selectExpr("doc_id", "graft_shingle_hashes(text) AS hs",
+        "graft_minhash_sig(graft_shingles(text)) AS ms")
+      .collect().map { r =>
+        val hs = if (r.isNullAt(1)) Set.empty[Long]
+          else r.getSeq[Long](1).toSet
+        val ms = if (r.isNullAt(2)) None else Some(r.getSeq[Long](2))
+        (r.getLong(0), (hs, ms))
+      }.toMap
+    // md5 over each band's comma-joined signature rows, as hex
+    def bands(ms: Seq[Long]): Seq[String] = ms.grouped(4).map { rows =>
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(rows.mkString(",").getBytes("UTF-8"))
+        .map(b => f"$b%02x").mkString
+    }.toSeq
+    val banded = kern.collect { case (id, (hs, Some(ms))) =>
+      id -> (hs, bands(ms)) }
+    val shared = (a: Long, b: Long) => (0 until 4).filter(i =>
+      banded(a)._2(i) == banded(b)._2(i))
+    // the corpus has what it claims
+    assert(banded.keySet === Set(0L, 1L, 2L, 3L, 8L))
+    assert(kern.filter(_._2._2.isEmpty).forall(_._2._1.isEmpty))
+    assert(shared(0, 1) === (0 until 4))
+    assert(shared(0, 2) === Seq(0, 1) && shared(1, 2) === Seq(0, 1))
+    assert(shared(0, 3) === Seq(2, 3) && shared(2, 3).isEmpty)
+    // the definition: a < b sharing a band hash, each pair once
+    val ids = banded.keys.toSeq.sorted
+    val cand = for (a <- ids; b <- ids if a < b && shared(a, b).nonEmpty)
+      yield (a, b)
+    val verified = cand.flatMap { case (a, b) =>
+      val (ha, hb) = (banded(a)._1, banded(b)._1)
+      val common = (ha & hb).size.toLong
+      val j = common * 1.0 / (ha.size + hb.size - common)
+      if (j >= 0.7) Some((a, b, common, j)) else None
+    }
+    assert(verified.map(p => (p._1, p._2)) ===
+      Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (1L, 3L)))
+    val lsh = graft.queries.Dedup.queries("dedup_minhash_lsh")(spark, lshDir)
+      .collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    assert(lsh === verified)
+    val prec = graft.queries.Dedup.queries("dedup_precision_lsh")(
+      spark, lshDir).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(prec === Seq((cand.size.toLong, verified.size.toLong)))
+    Caching.releaseAll(spark)
+  }
+
+  test("dedup_minhash_lsh + dedup_components at sf0.001 run 26 jobs") {
+    // the job budget of the dedup_lsh benchmark pair: the LSH query's
+    // cache stage, its range-sort stages and result, and the components
+    // builder's pair pipeline and rounds. The table is read once first,
+    // so its schema job is not counted, and no earlier cache is reused.
+    val sf = SparkEntry.smokeDir
+    Tables.documents(spark, sf).schema
+    Caching.releaseAll(spark)
+    val (_, jobs) = JobRecorder.record(spark) {
+      graft.queries.Dedup.queries("dedup_minhash_lsh")(spark, sf).collect()
+      graft.queries.Dedup.queries("dedup_components")(spark, sf).collect()
+    }
+    Caching.releaseAll(spark)
+    assert(jobs.size === 26, jobs.mkString("jobs: ", " | ", ""))
+  }
 }

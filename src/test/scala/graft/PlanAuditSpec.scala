@@ -1,10 +1,17 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
-import org.apache.spark.sql.execution.{FormattedMode, GenerateExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FilterExec, FormattedMode,
+  GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+  Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 
 /** Plan-shape regressions: the properties that matter at 100 TB must stay
   * visible in the optimized plans — predicate pushdown, column pruning,
@@ -174,6 +181,61 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(!p.contains("SortAggregate"),
       "packed min fell off the hash aggregation path")
     assert(!p.contains("SinglePartition"))
+  }
+
+  /** Every node of an executed plan: through AQE's final plans and query
+    * stages, and into the cached plan below each in-memory scan. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => s +: nodes(s.plan)
+    case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+    case _ => p +: p.children.flatMap(nodes)
+  }
+
+  /** [[nodes]] of one join side, stopping at in-memory scans: what runs
+    * between the join and its cache. */
+  private def sideNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => sideNodes(a.executedPlan)
+    case s: QueryStageExec => s +: sideNodes(s.plan)
+    case _ => p +: p.children.flatMap(sideNodes)
+  }
+
+  test("dedup self-joins read their co-partitioned caches with no " +
+    "exchange on either side, and no filter re-runs a kernel") {
+    for (name <- Seq("dedup_minhash_lsh", "dedup_neardup_jaccard")) {
+      val df = SparkEntry.queries(name)(spark, d)
+      df.collect()
+      val all = nodes(df.queryExecution.executedPlan)
+      val joins = all.collect {
+        case j: ShuffledHashJoinExec if j.joinType == Inner => j }
+      assert(joins.size == 1, s"$name: ${joins.size} inner hash joins")
+      val join = joins.head
+      for (side <- join.children) {
+        val ns = sideNodes(side)
+        assert(ns.exists(_.isInstanceOf[InMemoryTableScanExec]),
+          s"$name: a self-join side does not read the cache")
+        val ex = ns.filter(n =>
+          n.isInstanceOf[Exchange] || n.isInstanceOf[ReusedExchangeExec])
+        assert(ex.isEmpty, s"$name: exchange on a self-join side: " +
+          ex.map(_.nodeName).mkString(", "))
+      }
+      val kernelFilters = all.collect {
+        case f: FilterExec
+          if f.condition.exists(_.prettyName.startsWith("graft_")) => f }
+      assert(kernelFilters.isEmpty,
+        s"$name: a filter evaluates a kernel: ${kernelFilters.mkString}")
+      if (name == "dedup_minhash_lsh") {
+        assert(!all.exists(_.isInstanceOf[BroadcastExchangeExec]),
+          "LSH plan broadcasts")
+        // both sides read the one cache: one shuffle, feeding it
+        val hashEx = join.children.flatMap(nodes).collect {
+          case e: ShuffleExchangeExec
+            if e.outputPartitioning.isInstanceOf[HashPartitioning] => e.id }
+        assert(hashEx.distinct.size == 1,
+          s"LSH self-join has ${hashEx.distinct.size} hash exchanges below")
+      }
+    }
+    Caching.releaseAll(spark)
   }
 
   test("components rounds have no single-partition stage") {
