@@ -9,7 +9,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * Several query builders persist a frame that feeds two or more downstream
   * joins (the k-means assignment behind `dedup_semantic`, the SRP signature
-  * table, the df-capped postings, the components edge list). The driver
+  * table, the components edge list, and the band or postings table of
+  * every [[graft.operators.PairJoin.selfJoin]], which is hash-partitioned
+  * before the persist so both sides of the self-join read it with no
+  * exchange). The driver
   * harnesses drop those wholesale with `spark.catalog.clearCache()` between
   * queries, but an application embedding this library in a long-lived
   * session needs a targeted release that does not clobber its OWN caches:

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.PairJoin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,16 +31,19 @@ import org.apache.spark.sql.types.DecimalType
   *  - MinHash-LSH reduces candidates further: 16 permutations banded 4×4,
   *    so only pairs agreeing on a full band (J ≈ 0.7+) collide;
   *  - pair verification (exact Jaccard) touches only candidate pairs;
-  *  - the self-joins' inputs (capped postings, LSH buckets) are
-  *    hash-partitioned on the join key, then persisted: each is shuffled
-  *    once, and both join sides read the cache with no exchange (the
+  *  - every band or postings self-join (capped postings, LSH buckets,
+  *    simhash bands) goes through [[graft.operators.PairJoin]]: its input
+  *    is hash-partitioned on the join key, then persisted, so it shuffles
+  *    once and both join sides read the cache with no exchange (the
   *    local-mode analog of staging a partitioned inverted index to
-  *    storage between cluster jobs).
+  *    storage between cluster jobs); a band table emits each pair from
+  *    its lowest agreeing band, so no `distinct` follows the join.
   */
 object Dedup {
 
   private val NumPerm = 16
   private val Bands = 4 // 4 bands × 4 rows
+  private val SimBands = 4 // simhash bands: Hamming ≤ 3 leaves one intact
   private val DfCap = 1000
 
   /** Canonical (doc_id, text) view of an arbitrary corpus. */
@@ -120,11 +124,9 @@ object Dedup {
     *
     * Each posting carries its document's set size, (doc_id, n, h), so the
     * pair aggregation reads both sizes off the joined rows and no consumer
-    * joins a size table back. The capped postings are hash-partitioned on
-    * h BEFORE the persist: the self-join reads the cached table on both
-    * sides with no exchange between either side and the cache, so the
-    * postings shuffle once, into the cache, and the only exchange after it
-    * is the pair aggregation's. */
+    * joins a size table back. The df-capped postings go through
+    * [[PairJoin.selfJoin]]: they shuffle once, into its cache, and the
+    * only exchange after it is the pair aggregation's. */
   private def cappedCommon(docs: DataFrame, idCol: String,
                            textCol: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
@@ -136,40 +138,13 @@ object Dedup {
         graft.functions.GraftFunctions.shingleHashes(col("text")).as("hs")))
     val inv = sh.select(col("doc_id"), size(col("hs")).as("n"),
       explode(col("hs")).as("h"))
-    // df cap via a map-side-combinable groupBy(h).count() reduced to the
-    // tiny OVER-cap blocklist, broadcast anti-joined against the postings.
-    // A `count over (partition by h)` window also computes df in one
-    // shuffle, but it colocates EVERY posting of a shingle hash in one
-    // window partition before the cap filter can drop it — at corpus scale
-    // a universal boilerplate shingle (df ~1e9) funnels its whole posting
-    // list through a single straggler task ahead of the very filter meant
-    // to remove it. The groupBy form shuffles only per-partition combined
-    // (h, count) rows — a hot h is one row per map partition — and the
-    // blocklist it yields is bounded by |corpus shingle vocabulary with
-    // df > cap|, i.e. the heavy hitters only, so the anti-join broadcasts.
-    // (A collect_list + local-pair-expansion formulation skips the agg
-    // but its per-shingle pair loop runs as interpreted HOFs — measured
-    // 35% slower at sf0.1.)
-    val overCap = inv.groupBy(col("h"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > DfCap)
-      .select(col("h"))
-    val postings = graft.Caching.persistTracked(
-      inv.join(broadcast(overCap), Seq("h"), "left_anti")
-        .repartition(col("h")))
-    // shuffle-hash pinned: both sides are the cached, h-partitioned
-    // postings, so the join needs no exchange; unhinted, the planner
-    // broadcasts the cached table at fixture size (a serial build of the
-    // whole posting list), and at corpus scale the postings can never
-    // broadcast
-    postings.select(col("doc_id").as("a"), col("n").as("na"), col("h"))
-      .hint("shuffle_hash")
-      .join(postings.select(col("doc_id").as("b"), col("n").as("nb"),
-        col("h")), "h")
-      .filter(col("a") < col("b"))
-      .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("common"), max(col("na")).as("na"),
-        max(col("nb")).as("nb"))
+    // (A collect_list + local-pair-expansion formulation skips the
+    // self-join, but its per-shingle pair loop runs as interpreted HOFs —
+    // measured 35% slower at sf0.1.)
+    PairJoin.selfJoin(PairJoin.capDf(inv, "h", DfCap), "doc_id", Seq("h"))
+      .groupBy(col("l.doc_id").as("a"), col("r.doc_id").as("b"))
+      .agg(count(lit(1)).as("common"), max(col("l.n")).as("na"),
+        max(col("r.n")).as("nb"))
   }
 
   /** Containment near-dup pairs (asymmetric Jaccard |A∩B|/|A|): catches
@@ -224,29 +199,16 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
 
   /** The LSH candidate pairs (a, b, hs_a, hs_b) of a corpus, a < b, each
-    * once: the band self-join of [[minhashLshPairs]], shared with the
-    * `dedup_precision_lsh` readout so it grades exactly this plan. A pair
-    * is emitted only from the LOWEST band where the two documents' band
-    * hashes agree, so every colliding pair appears once — the `distinct`
-    * over all colliding bands, without its shuffle. The bucket table is
-    * hash-partitioned on the join key before the persist, and the join
-    * is pinned to shuffle-hash: unhinted, the planner broadcasts the
-    * cached table at fixture size (a serial build task plus a broadcast
-    * exchange); at corpus scale it never fits. */
-  private def lshCandidates(norm: DataFrame): DataFrame = {
-    val buckets = graft.Caching.persistTracked(
-      lshBuckets(norm).repartition(col("band_id"), col("h")))
-    val bh = (side: String, band: Int) =>
-      element_at(col(s"$side.bh"), band + 1)
-    val lowerBandAgrees = (0 until Bands - 1).map(j =>
-      col("l.band_id") > j && bh("l", j) === bh("r", j)).reduce(_ || _)
-    buckets.hint("shuffle_hash").as("l")
-      .join(buckets.as("r"), col("l.band_id") === col("r.band_id") &&
-        col("l.h") === col("r.h") && col("l.doc_id") < col("r.doc_id") &&
-        !lowerBandAgrees)
+    * once: the band self-join ([[PairJoin.selfJoin]] on (band_id, h)) of
+    * [[minhashLshPairs]], shared with the `dedup_precision_lsh` readout so
+    * it grades exactly this plan. A pair is emitted only from the lowest
+    * band where the two documents' band hashes agree
+    * ([[PairJoin.noLowerBandAgrees]]). */
+  private def lshCandidates(norm: DataFrame): DataFrame =
+    PairJoin.selfJoin(lshBuckets(norm), "doc_id", Seq("band_id", "h"),
+        PairJoin.noLowerBandAgrees("bh", Bands))
       .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"),
         col("l.hs").as("hs_a"), col("r.hs").as("hs_b"))
-  }
 
   /** (doc_id, hs, bh, band_id, h): the LSH bucket table, one row per
     * (document, band). `hs` is the hashed shingle set, `bh` the 4 band
@@ -418,68 +380,58 @@ object Dedup {
                        textCol: String = "text"): DataFrame = {
     require(bandBits >= 1 && bandBits <= 32,
       s"bandBits must be in [1, 32], got $bandBits")
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    val bands = 4
-    val words = (bands * bandBits + 63) / 64
-    val sims = normalize(docs, idCol, textCol)
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.simhashWide(col("text"), words)
-          .as("simhash"))
-      .filter(col("simhash").isNotNull)
-    val banded = sims.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until bands).map(b =>
-        bandValue(col("simhash"), b * bandBits, bandBits)): _*)))
-      .toDF("doc_id", "simhash", "band_id", "band_val")
-    val cand = banded
-      .select(col("doc_id").as("a"), col("simhash").as("sh_a"),
-        col("band_id"), col("band_val"))
-      // executed at sf0.001, the final plan shuffles the band table once
-      // and the other side reads it through a ReusedExchange; whether the
-      // hint pays is open (ROADMAP: re-adjudicate the shuffle_hash hints)
-      .hint("shuffle_hash")
-      .join(banded.select(col("doc_id").as("b"), col("simhash").as("sh_b"),
-        col("band_id"), col("band_val")), Seq("band_id", "band_val"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"), col("sh_a"), col("sh_b")).distinct()
-    val hamming = (0 until words).map(i =>
-      expr(s"CAST(bit_count(element_at(sh_a, ${i + 1}) ^ " +
-        s"element_at(sh_b, ${i + 1})) AS BIGINT)")).reduce(_ + _)
-    cand
-      .withColumn("hamming", hamming)
-      .filter(col("hamming") <= 3)
-      .select(col("a").as("doc_a"), col("b").as("doc_b"), col("hamming"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    simhashBandPairs(docs, idCol, textCol, bandBits)(words =>
+      graft.functions.GraftFunctions.simhashWide(col("text"), words))
   }
 
   /** SimHash near-dup pairs at Hamming distance <= 3, found via 15-bit
     * band blocking (4 bands). Pigeonhole: <= 3 differing bits leave at
     * least one of the 4 bands intact, so blocking loses no qualifying
     * pair. This fixed 60-bit/15-bit form is what the DuckDB oracle
-    * replays; at larger corpus sizes the band-value domain must grow with
-    * the corpus — use [[simhashPairsWide]] with [[recommendedBandBits]],
-    * the executable form of the "band bits ~ log₂ N + margin" rule. */
+    * replays; it is [[simhashPairsWide]]' core over the one-word signature
+    * `array(graft_simhash(text))`, where the 15-bit band at offset 15b is
+    * `shiftright(simhash, 15b) & 32767` and the Hamming distance is one
+    * `bit_count`. At larger corpus sizes the band-value domain must grow
+    * with the corpus — use [[simhashPairsWide]] with
+    * [[recommendedBandBits]], the executable form of the "band bits ~
+    * log₂ N + margin" rule. */
   def simhashPairs(docs: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text"): DataFrame = {
-    val sims = simhashSignatures(docs, idCol, textCol)
-    val banded = sims.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map(b =>
-        expr(s"shiftright(simhash, ${15 * b}) & 32767")): _*)))
-      .toDF("doc_id", "simhash", "band_id", "band_val")
-    val cand = banded
-      .select(col("doc_id").as("a"), col("simhash").as("sh_a"),
-        col("band_id"), col("band_val"))
-      // executed at sf0.001, the final plan shuffles the band table once
-      // and the other side reads it through a ReusedExchange; whether the
-      // hint pays is open (ROADMAP: re-adjudicate the shuffle_hash hints)
-      .hint("shuffle_hash")
-      .join(banded.select(col("doc_id").as("b"), col("simhash").as("sh_b"),
-        col("band_id"), col("band_val")), Seq("band_id", "band_val"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"), col("sh_a"), col("sh_b")).distinct()
-    cand
-      .withColumn("hamming", expr("CAST(bit_count(sh_a ^ sh_b) AS BIGINT)"))
+                   textCol: String = "text"): DataFrame =
+    simhashBandPairs(docs, idCol, textCol, 15)(_ =>
+      array(graft.functions.GraftFunctions.simhash(col("text"))))
+
+  /** The pair core of both simhash forms: (doc_a, doc_b, hamming) at
+    * Hamming ≤ 3 over the signature `sig(words)` (an array<long>
+    * expression over `text`, `words` = ceil(4·bandBits/64)), blocked on
+    * [[SimBands]] bands of `bandBits` bits. The band table carries the
+    * signature and all band values, one row per (document, band), through
+    * [[PairJoin.selfJoin]] on (band_id, band_val); a pair is emitted from
+    * its lowest agreeing band only, so no `distinct` is needed, and the
+    * Hamming distance is computed in the joined row. A document with no
+    * tokens has a NULL signature or a NULL first word and is in no band;
+    * the explode skips it, not a Filter, which would be pushed below the
+    * projection and re-run the kernel. */
+  private def simhashBandPairs(docs: DataFrame, idCol: String,
+                               textCol: String, bandBits: Int)(
+      sig: Int => Column): DataFrame = {
+    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
+    val words = (SimBands * bandBits + 63) / 64
+    val bands = array((0 until SimBands).map(b =>
+      bandValue(col("sig"), b * bandBits, bandBits)): _*)
+    val banded = normalize(docs, idCol, textCol)
+      .select(col("doc_id"), sig(words).as("sig"))
+      .select(col("doc_id"), col("sig"), bands.as("bands"))
+      .select(col("doc_id"), col("sig"), col("bands"),
+        posexplode(when(element_at(col("sig"), 1).isNotNull, col("bands")))
+          .as(Seq("band_id", "band_val")))
+    val hamming = (1 to words).map(i =>
+      bit_count(element_at(col("l.sig"), i)
+        .bitwiseXOR(element_at(col("r.sig"), i))).cast("long")).reduce(_ + _)
+    PairJoin.selfJoin(banded, "doc_id", Seq("band_id", "band_val"),
+        PairJoin.noLowerBandAgrees("bands", SimBands))
+      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
+        hamming.as("hamming"))
       .filter(col("hamming") <= 3)
-      .select(col("a").as("doc_a"), col("b").as("doc_b"), col("hamming"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 

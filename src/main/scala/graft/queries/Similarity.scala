@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.PairJoin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -769,7 +770,12 @@ object Similarity {
 
   /** The SRP candidate stages shared by [[srpCosinePairs]] and the
     * precision readout: (g, cand) where g is the persisted gridded
-    * representation and cand the raw band-collision pairs. */
+    * representation and cand the band-collision pairs (a, b, bands_hit).
+    * The band table carries each vector's 8 band values through
+    * [[PairJoin.selfJoin]] on (band_id, band_val); a pair is emitted from
+    * its lowest agreeing band only, and `bands_hit` — the number of bands
+    * on which the two vectors agree — is counted in the joined row, so no
+    * per-pair aggregation follows the join. */
   private def srpStages(emb: DataFrame): (DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val gf = graft.functions.GraftFunctions
@@ -784,20 +790,17 @@ object Similarity {
           x => grid(x.cast("double"), 1000000.0).cast("long")).as("xg"))
       .withColumn("n2", gf.dotl(col("xg"), col("xg")))
       .withColumn("bands", gf.srpBands(col("xg"))))
-    val banded = g.select(col("vec_id"), posexplode(col("bands")))
-      .select(col("vec_id"), col("pos").as("band_id"), col("col").as("band_val"))
-    val cand = banded
-      .select(col("vec_id").as("a"), col("band_id"), col("band_val"))
-      // executed at sf0.001, the final plan shuffles the banded cache
-      // twice, one stage per side (no exchange reuse over a cache scan);
-      // whether the hint pays is open (ROADMAP: re-adjudicate the
-      // shuffle_hash hints)
-      .hint("shuffle_hash")
-      .join(banded.select(col("vec_id").as("b"), col("band_id"),
-        col("band_val")), Seq("band_id", "band_val"))
-      .filter(col("a") < col("b"))
-      .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("bands_hit"))
+    val banded = g.select(col("vec_id"), col("bands"),
+      posexplode(col("bands")).as(Seq("band_id", "band_val")))
+    val nBands = graft.functions.SrpBands.NumBands
+    val bandsHit = (1 to nBands).map(j =>
+      when(element_at(col("l.bands"), j) === element_at(col("r.bands"), j),
+        1L).otherwise(0L)).reduce(_ + _)
+    val cand = PairJoin.selfJoin(banded, "vec_id",
+        Seq("band_id", "band_val"),
+        PairJoin.noLowerBandAgrees("bands", nBands))
+      .select(col("l.vec_id").as("a"), col("r.vec_id").as("b"),
+        bandsHit.as("bands_hit"))
     (g, cand)
   }
 

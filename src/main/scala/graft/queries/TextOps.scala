@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.PairJoin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -91,8 +92,7 @@ object TextOps {
     // comes out of the join on term, so it is already hash-partitioned
     // on term, and the final sf0.001 plan reads it on both sides with no
     // exchange; the hint only keeps the planner from broadcasting the
-    // cached table. Whether it pays is open (ROADMAP: re-adjudicate the
-    // shuffle_hash hints)
+    // cached table (PairJoin.selfJoin would repartition it again)
     wc.select(col("doc_id").as("a"), col("term"), col("w").as("wa"))
       .hint("shuffle_hash")
       .join(wc.select(col("doc_id").as("b"), col("term"),
@@ -863,24 +863,10 @@ object TextOps {
         .select(col("doc_id"),
           explode(graft.functions.GraftFunctions.winnow(col("text")))
             .as("fp")))
-      val overCap = fps.groupBy(col("fp"))
-        .agg(count(lit(1)).as("df"))
-        .filter(col("df") > 100).select(col("fp"))
-      val capped = graft.Caching.persistTracked(
-        fps.join(broadcast(overCap), Seq("fp"), "left_anti"))
-      capped.select(col("doc_id").as("a"), col("fp"))
-        // executed at sf0.001, the final plan shuffles the cached
-        // postings twice, one stage per side (no exchange reuse over a
-        // cache scan); whether the hint pays is open (ROADMAP:
-        // re-adjudicate the shuffle_hash hints)
-        .hint("shuffle_hash")
-        .join(capped.select(col("doc_id").as("b"), col("fp")), "fp")
-        .filter(col("a") < col("b"))
-        .groupBy(col("a"), col("b"))
+      PairJoin.selfJoin(PairJoin.capDf(fps, "fp", 100), "doc_id", Seq("fp"))
+        .groupBy(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
         .agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= 20)
-        .select(col("a").as("doc_a"), col("b").as("doc_b"),
-          col("n_shared"))
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 

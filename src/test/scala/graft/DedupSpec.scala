@@ -324,4 +324,21 @@ class DedupSpec extends SparkSpec {
     Caching.releaseAll(spark)
     assert(jobs.size === 26, jobs.mkString("jobs: ", " | ", ""))
   }
+
+  // the job budgets of the other pair finders on the shared band and
+  // postings self-join (graft.operators.PairJoin), counted the same way
+  for ((name, budget) <- Seq("dedup_simhash_pairs" -> 6,
+    "dedup_winnow_pairs" -> 11, "dedup_embed_lsh" -> 9)) {
+    test(s"$name at sf0.001 runs $budget jobs") {
+      val sf = SparkEntry.smokeDir
+      Tables.documents(spark, sf).schema
+      Tables.embeddings(spark, sf).schema
+      Caching.releaseAll(spark)
+      val (_, jobs) = JobRecorder.record(spark) {
+        SparkEntry.queries(name)(spark, sf).collect()
+      }
+      Caching.releaseAll(spark)
+      assert(jobs.size === budget, jobs.mkString("jobs: ", " | ", ""))
+    }
+  }
 }

@@ -200,12 +200,41 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     case _ => p +: p.children.flatMap(sideNodes)
   }
 
+  /** [[nodes]] without broadcast builds: the shuffles a plan runs on its
+    * own path (a df blocklist's count is broadcast, checked elsewhere). */
+  private def shuffleNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case b: BroadcastExchangeExec => Seq(b)
+    case a: AdaptiveSparkPlanExec => shuffleNodes(a.executedPlan)
+    case s: QueryStageExec => s +: shuffleNodes(s.plan)
+    case m: InMemoryTableScanExec => m +: shuffleNodes(m.relation.cachedPlan)
+    case _ => p +: p.children.flatMap(shuffleNodes)
+  }
+
+  /** The nodes from `p` down to `target`, both included, in the final
+    * plan; empty when `target` is not below `p`. */
+  private def pathTo(p: SparkPlan, target: SparkPlan): Seq[SparkPlan] =
+    if (p eq target) Seq(p)
+    else {
+      val below = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case _ => p.children
+      }
+      below.iterator.map(pathTo(_, target)).find(_.nonEmpty)
+        .map(p +: _).getOrElse(Nil)
+    }
+
   test("dedup self-joins read their co-partitioned caches with no " +
     "exchange on either side, and no filter re-runs a kernel") {
-    for (name <- Seq("dedup_minhash_lsh", "dedup_neardup_jaccard")) {
+    for (name <- Seq("dedup_minhash_lsh", "dedup_neardup_jaccard",
+      "dedup_winnow_pairs", "dedup_embed_lsh", "dedup_simhash_pairs")) {
+      // no cache left by an earlier builder may stand in for this plan's
+      // (dedup_precision_embed persists the SRP candidate pairs)
+      Caching.releaseAll(spark)
       val df = SparkEntry.queries(name)(spark, d)
       df.collect()
-      val all = nodes(df.queryExecution.executedPlan)
+      val root = df.queryExecution.executedPlan
+      val all = nodes(root)
       val joins = all.collect {
         case j: ShuffledHashJoinExec if j.joinType == Inner => j }
       assert(joins.size == 1, s"$name: ${joins.size} inner hash joins")
@@ -219,20 +248,27 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         assert(ex.isEmpty, s"$name: exchange on a self-join side: " +
           ex.map(_.nodeName).mkString(", "))
       }
+      // both sides read the one cache: one shuffle, feeding it
+      val hashEx = join.children.flatMap(shuffleNodes).collect {
+        case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[HashPartitioning] => e.id }
+      assert(hashEx.distinct.size == 1,
+        s"$name: ${hashEx.distinct.size} hash exchanges below the self-join")
       val kernelFilters = all.collect {
         case f: FilterExec
           if f.condition.exists(_.prettyName.startsWith("graft_")) => f }
       assert(kernelFilters.isEmpty,
         s"$name: a filter evaluates a kernel: ${kernelFilters.mkString}")
-      if (name == "dedup_minhash_lsh") {
+      if (name == "dedup_minhash_lsh")
         assert(!all.exists(_.isInstanceOf[BroadcastExchangeExec]),
           "LSH plan broadcasts")
-        // both sides read the one cache: one shuffle, feeding it
-        val hashEx = join.children.flatMap(nodes).collect {
-          case e: ShuffleExchangeExec
-            if e.outputPartitioning.isInstanceOf[HashPartitioning] => e.id }
-        assert(hashEx.distinct.size == 1,
-          s"LSH self-join has ${hashEx.distinct.size} hash exchanges below")
+      // a pair is emitted once, from its lowest agreeing band: no
+      // distinct or per-pair count sits between the join and verification
+      if (name == "dedup_embed_lsh" || name == "dedup_simhash_pairs") {
+        val above = pathTo(root, join)
+        assert(above.nonEmpty, s"$name: self-join not on the result path")
+        assert(!above.exists(_.isInstanceOf[HashAggregateExec]),
+          s"$name: an aggregate follows the band self-join")
       }
     }
     Caching.releaseAll(spark)

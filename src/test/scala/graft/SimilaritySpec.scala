@@ -56,6 +56,44 @@ class SimilaritySpec extends SparkSpec {
     assert(out.head.getLong(2) === 8L)
   }
 
+  test("SRP candidates and bands_hit equal all-pairs band agreement of " +
+    "graft_srp_bands") {
+    import spark.implicits._
+    graft.functions.GraftFunctions.ensureRegistered(spark)
+    val xg = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => r.getLong(0) ->
+        r.getSeq[Float](1).map(x => math.floor(x * 1e6 + 0.5).toLong))
+      .toMap
+    val bands = xg.toSeq.toDF("vec_id", "xg")
+      .select(col("vec_id"),
+        graft.functions.GraftFunctions.srpBands(col("xg")))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val ids = bands.keys.toSeq.sorted
+    // every pair agreeing on at least one band, with the agreeing count
+    val cand = (for {
+      a <- ids; b <- ids if a < b
+      hits = bands(a).zip(bands(b)).count { case (x, y) => x == y }
+      if hits > 0
+    } yield (a, b, hits.toLong)).toSeq
+    val verified = cand.filter { case (a, b, _) =>
+      val dot = BigInt(xg(a).zip(xg(b)).map { case (x, y) => x * y }.sum)
+      val na2 = BigInt(xg(a).map(x => x * x).sum)
+      val nb2 = BigInt(xg(b).map(x => x * x).sum)
+      dot > 0 && dot * dot * 10000 >= na2 * nb2 * 1225
+    }
+    val lsh = graft.queries.Similarity.queries("dedup_embed_lsh")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(lsh === verified)
+    val prec = graft.queries.Similarity.queries("dedup_precision_embed")(
+      spark, dir).collect().head
+    assert((prec.getLong(0), prec.getLong(1)) ===
+      (cand.size.toLong, verified.size.toLong))
+    assert(verified.nonEmpty && cand.size > verified.size,
+      "fixture lost its band collisions")
+    Caching.releaseAll(spark)
+  }
+
   test("SRP-LSH fixture pairs satisfy the exact integer cosine gate") {
     val sfDir = "/root/testdata/sf0.01"
     val out = graft.queries.Similarity.queries("dedup_embed_lsh")(
